@@ -4,7 +4,7 @@
 ``queries()`` exposes the relational operator surface (SURVEY.md §2.J), the
 training-data-pipeline operators, and the KG pipeline stages; each callable
 takes (spark, sf_dir) and returns a DataFrame. ``oracle_sql()`` supplies the
-DuckDB-equivalent SQL for EVERY query (84/84) — the KG/NLP queries are
+DuckDB-equivalent SQL for EVERY query (85/85) — the KG/NLP queries are
 oracled by relational/kg_oracle.py's full SQL re-derivation of the
 best-match pipeline, on top of the pytest golden/round-trip suites.
 """
@@ -265,7 +265,7 @@ def _kg_instances(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Driver-window ordering: the driver evaluates the first 50 entries of
-    this dict. All 84 queries are oracle-backed; the 34 that cannot fit are
+    this dict. All 85 queries are oracle-backed; the 35 that cannot fit are
     explicitly demoted below (each with >=2 green driver rounds in
     CORRECTNESS_r01-r03) and stay covered by scripts/oracle_check.py under
     identical harness semantics."""
@@ -291,7 +291,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_components": _kg_components,
     })
     with_oracle = set(oracle_sql())
-    # ALL 84 queries are oracle-backed but the driver checks only the
+    # ALL 85 queries are oracle-backed; the correctness window covers the
     # first 50. Round-4 window ROTATION (VERDICT r3 #2): the 18 entries
     # below are long-green relational queries, each with >=2 green rows
     # in CORRECTNESS_r01/r02/r03 AND pytest-pinned semantics; demoting

@@ -118,8 +118,9 @@ def connected_components(edges: DataFrame,
     component labeled by its minimum member — the public graph surface
     over the hybrid engine `textdata/dedup.py::candidate_components`
     (driver union-find under the edge budget, distributed min-label
-    propagation with per-round lineage truncation above it; the same
-    machinery canonicalization and dup-grouping run on).
+    propagation with per-round lineage truncation above it). The same
+    engine labels `graph/canonicalize.py::canonical_map` and the near-dup
+    groups of `textdata/dedup.py`.
 
     ``vertices`` (one ``cui`` column) adds isolated vertices as their own
     singleton components — edge lists alone cannot name them.

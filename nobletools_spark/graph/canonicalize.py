@@ -7,18 +7,21 @@ explicit equivalent — its UMLS input is already CUI-canonical — but the
 stage is required for multi-vocabulary merges (e.g. OBO + RRF loads where
 the same entity carries two codes).
 
-Algorithm: alternating large-star / small-star (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC 2014) — each round is two
-groupBy shuffles keyed on node, converges in O(log^2 n) rounds on any
-graph and O(log n) in practice; no driver-side state besides the
-convergence counter. This is the standard Spark CC formulation that scales
-to billions of edges (GraphFrames uses the same scheme).
+Components are labeled by ``textdata/dedup.py::candidate_components``,
+the one connected-components engine of the package (also behind
+``graph/analytics.py::connected_components`` and near-dup grouping):
+driver-side union-find while the edge list fits its budget, distributed
+min-label propagation above it. Synonym/xref edge lists are
+dictionary-scale, so canonicalization takes the exact union-find branch
+whatever the graph's diameter.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..textdata.dedup import candidate_components
 
 
 def synonym_edges(term_index: DataFrame) -> DataFrame:
@@ -44,60 +47,16 @@ def xref_edges(code_xref: DataFrame) -> DataFrame:
             .where(F.col("src") != F.col("dst")))
 
 
-def connected_components(edges: DataFrame, max_iter: int = 15) -> DataFrame:
-    """edges(src, dst) -> components(cui, canonical_cui).
-
-    Hash-min label propagation: every node starts labeled with itself and
-    repeatedly takes the min of its own and its neighbors' labels. Rounds =
-    graph diameter; synonym/xref graphs are unions of near-stars (hub =
-    per-term min CUI from synonym_edges), so diameter is tiny (<=4) and
-    each round is one shuffle join + one aggregation. For adversarial
-    long-chain graphs at larger scale, swap in the alternating
-    large-star/small-star scheme (Kiveris et al. 2014, O(log^2 n) rounds) —
-    same (cui, canonical_cui) contract. Deterministic: min over string
-    labels; convergence checked with an isEmpty() probe per round.
-    """
-    # symmetric edge list
-    e = (edges.select("src", "dst")
-         .unionByName(edges.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-         .where(F.col("src") != F.col("dst"))
-         .distinct())
-
-    # each round references `labels` twice (neighbor flow + self), so the
-    # logical plan would DOUBLE per iteration; localCheckpoint eagerly
-    # truncates lineage — without it analysis OOMs after ~12 rounds
-    e = e.localCheckpoint()
-    labels = (e.select(F.col("src").alias("cui"))
-              .distinct()
-              .withColumn("label", F.col("cui"))
-              .localCheckpoint())
-    for _ in range(max_iter):
-        nbr = (e.join(labels.withColumnRenamed("cui", "dst"), "dst")
-               .groupBy("src").agg(F.min("label").alias("nbr_label"))
-               .withColumnRenamed("src", "cui"))
-        new_labels = (labels.join(nbr, "cui", "left")
-                      .select("cui",
-                              F.least("label", F.coalesce("nbr_label", "label"))
-                              .alias("label"))
-                      .localCheckpoint())
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "cui")
-                   .where(F.col("n.label") != F.col("o.label")))
-        labels = new_labels
-        if changed.isEmpty():
-            break
-
-    return labels.select("cui", F.col("label").alias("canonical_cui"))
-
-
 def canonical_map(term_index: DataFrame, code_xref: DataFrame | None = None,
                   ) -> DataFrame:
     """Full P5: synonym + xref edges -> (cui, canonical_cui) mapping."""
     e = synonym_edges(term_index)
     if code_xref is not None:
         e = e.unionByName(xref_edges(code_xref)).distinct()
-    return connected_components(e)
+    comp = candidate_components(e.select(F.col("src").alias("a"),
+                                         F.col("dst").alias("b")))
+    return comp.select(F.col("doc_id").alias("cui"),
+                       F.col("comp").alias("canonical_cui"))
 
 
 def canonicalize_mentions(mentions: DataFrame, mapping: DataFrame) -> DataFrame:

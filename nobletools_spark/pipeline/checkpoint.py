@@ -140,9 +140,8 @@ def run_checkpointed_pipeline(spark: SparkSession, documents: DataFrame,
     digests its config + its upstream fingerprint, so editing a stage's
     config invalidates it and everything downstream — nothing upstream."""
     from ..config import for_search_method
-    from .stages import (annotate_documents, detect_mentions,
-                         materialize_triples, salt_documents,
-                         split_sentences)
+    from .stages import (match_stage, materialize_triples,
+                         salt_documents, split_sentences)
 
     cm = CheckpointManager(spark, root)
     cfg = for_search_method(method)
@@ -155,15 +154,11 @@ def run_checkpointed_pipeline(spark: SparkSession, documents: DataFrame,
 
     fp_men = fingerprint("mentions", fp_sent, str(method),
                          "ctx" if context_dico is not None else "")
-    if context_dico is not None:
-        ctx_bc = spark.sparkContext.broadcast(context_dico)
-        men = cm.run_stage(
-            "mentions", fp_men,
-            lambda: annotate_documents(sent.df, dico_bc, ctx_bc, cfg))
-    else:
-        men = cm.run_stage(
-            "mentions", fp_men,
-            lambda: detect_mentions(sent.df, dico_bc, cfg))
+    ctx_bc = (spark.sparkContext.broadcast(context_dico)
+              if context_dico is not None else None)
+    men = cm.run_stage(
+        "mentions", fp_men,
+        lambda: match_stage(sent.df, dico_bc, ctx_bc, cfg))
 
     canonical = None
     fp_canon = fingerprint("canonical", fp_men, str(canonicalize))

@@ -16,7 +16,8 @@ compacted-index search (``NobleCoderTerminology`` compacted flag,
 Candidate completeness: the compacted index files each term under only its
 rarest word; a term can match a sentence only if ALL its words appear
 there — in particular the rarest one — so the word join yields a superset
-of every matchable term. The in-UDF matcher then applies the full E-group
+of every matchable term. Words come from the raw text; the matcher sees it
+with DeID tags blanked out, which only removes words. The in-UDF matcher then applies the full E-group
 semantics (contiguity, order, subsumption, scoring) exactly as the
 broadcast path does — parity is pinned by test_shuffle_match.
 
@@ -35,9 +36,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
 from ..config import SearchConfig, for_search_method
-from ..matcher.core import process_sentence
 from ..terminology.storage import ConceptMeta, Dictionary
-from .stages import MENTIONS_SCHEMA
+from .stages import (MENTIONS_SCHEMA, detect_mentions, match_sentence,
+                     mention_columns)
 
 _WORDS_SCHEMA = ST.ArrayType(ST.StringType())
 
@@ -99,7 +100,7 @@ def detect_mentions_shuffle(sentences: DataFrame,
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in MENTIONS_SCHEMA.fields}
+            out = mention_columns()
             for doc_id, sent_id, text, offset, cand in zip(
                     pdf["doc_id"], pdf["sent_id"], pdf["text"],
                     pdf["offset"], pdf["cand"]):
@@ -128,22 +129,8 @@ def detect_mentions_shuffle(sentences: DataFrame,
                                     for t in arr(r["cterms"])))
                     mini.term_map = {t: tuple(sorted(s)) for t, s in tm.items()}
                     mini.word_map = {w: tuple(sorted(s)) for w, s in wm.items()}
-                for m in process_sentence(text, mini, cfg_final):
-                    anns = [{"text": t, "offset": int(offset) + o}
-                            for t, o in m.annotations]
-                    out["doc_id"].append(doc_id)
-                    out["sent_id"].append(int(sent_id))
-                    out["cui"].append(m.cui)
-                    out["concept_name"].append(m.concept_name)
-                    out["matched_term"].append(m.matched_term)
-                    out["normalized_term"].append(m.normalized_term)
-                    out["score"].append(float(m.score))
-                    out["annotations"].append(anns)
-                    out["start"].append(anns[0]["offset"] if anns else -1)
-                    out["end"].append(max(a["offset"] + len(a["text"])
-                                          for a in anns) if anns else -1)
-                    out["sem_types"].append(list(m.sem_types))
-                    out["sources"].append(list(m.sources))
+                match_sentence(out, doc_id, sent_id, text, offset, mini,
+                               cfg_final)
             if out["doc_id"]:
                 yield pd.DataFrame(out)
 
@@ -170,9 +157,8 @@ def detect_mentions_auto(sentences: DataFrame, dico: Dictionary,
                          ) -> DataFrame:
     """Physical-plan decision the reference makes implicitly by JDBM
     paging: broadcast the dictionary when it fits the budget, else run the
-    shuffle-join candidate pipeline over the persisted tables (requires
-    ``tables``; falls back to broadcast with a warning otherwise)."""
-    from .stages import detect_mentions
+    shuffle-join candidate pipeline over the persisted tables. Without
+    ``tables`` it always broadcasts, whatever the dictionary's size."""
     if estimate_dictionary_bytes(dico) <= budget_bytes or tables is None:
         bc = sentences.sparkSession.sparkContext.broadcast(dico)
         return detect_mentions(sentences, bc, cfg)

@@ -136,38 +136,60 @@ def split_sentences(documents: DataFrame, doc_type: str = SP.TYPE_MEDICAL_REPORT
     return documents.mapInPandas(gen, schema=SENTENCES_SCHEMA)
 
 
-def detect_mentions(sentences: DataFrame, dico_bc, cfg: SearchConfig | None = None,
-                    deid_scrub: bool = True) -> DataFrame:
+def match_sentence(cols: dict[str, list], doc_id: str, sent_id: int,
+                   text: str, offset: int, dico: Dictionary,
+                   cfg: SearchConfig, acronyms=None) -> tuple[str, list]:
+    """P2 for one sentence, the mention-row builder every match path
+    shares: blank DeID tags (same-length, offsets kept), run the matcher
+    (then the document's acronym pass when ``acronyms`` is given) and
+    append one row per mention to ``cols``, the MENTIONS_SCHEMA column
+    lists. Annotation offsets are rebased to document-absolute
+    (Mention.java:75-81). Returns the scrubbed text and the mentions."""
+    stext = SP.filter_deid_tags(text)
+    mentions = process_sentence(stext, dico, cfg)
+    if acronyms is not None:
+        mentions = acronyms.process(stext, mentions)
+    offset, sent_id = int(offset), int(sent_id)
+    (c_doc, c_sent, c_cui, c_name, c_matched, c_norm, c_score, c_anns,
+     c_start, c_end, c_sem, c_src) = cols.values()
+    for m in mentions:
+        anns = [{"text": t, "offset": offset + o} for t, o in m.annotations]
+        c_doc.append(doc_id)
+        c_sent.append(sent_id)
+        c_cui.append(m.cui)
+        c_name.append(m.concept_name)
+        c_matched.append(m.matched_term)
+        c_norm.append(m.normalized_term)
+        c_score.append(float(m.score))
+        c_anns.append(anns)
+        c_start.append(anns[0]["offset"] if anns else -1)
+        c_end.append(max(a["offset"] + len(a["text"]) for a in anns)
+                     if anns else -1)
+        c_sem.append(list(m.sem_types))
+        c_src.append(list(m.sources))
+    return stext, mentions
+
+
+def mention_columns() -> dict[str, list]:
+    """Empty MENTIONS_SCHEMA column lists, in field order."""
+    return {f.name: [] for f in MENTIONS_SCHEMA.fields}
+
+
+def detect_mentions(sentences: DataFrame, dico_bc,
+                    cfg: SearchConfig | None = None) -> DataFrame:
     """P2: the match stage. Broadcast-dictionary probe inside mapInPandas —
     relationally a broadcast hash semi-join of sentence words against the WT
     table followed by the TC expansion, executed as in-memory dict probes.
-    Annotation offsets are rebased to document-absolute (Mention.java:75-81).
     """
     cfg = cfg or for_search_method(None)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         dico: Dictionary = dico_bc.value if hasattr(dico_bc, "value") else dico_bc
         for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in MENTIONS_SCHEMA.fields}
+            out = mention_columns()
             for doc_id, sent_id, text, offset in zip(
                     pdf["doc_id"], pdf["sent_id"], pdf["text"], pdf["offset"]):
-                stext = SP.filter_deid_tags(text) if deid_scrub else text
-                for m in process_sentence(stext, dico, cfg):
-                    anns = [{"text": t, "offset": int(offset) + o}
-                            for t, o in m.annotations]
-                    out["doc_id"].append(doc_id)
-                    out["sent_id"].append(int(sent_id))
-                    out["cui"].append(m.cui)
-                    out["concept_name"].append(m.concept_name)
-                    out["matched_term"].append(m.matched_term)
-                    out["normalized_term"].append(m.normalized_term)
-                    out["score"].append(float(m.score))
-                    out["annotations"].append(anns)
-                    out["start"].append(anns[0]["offset"] if anns else -1)
-                    out["end"].append(max(a["offset"] + len(a["text"]) for a in anns)
-                                      if anns else -1)
-                    out["sem_types"].append(list(m.sem_types))
-                    out["sources"].append(list(m.sources))
+                match_sentence(out, doc_id, sent_id, text, offset, dico, cfg)
             if out["doc_id"]:  # empty frames infer float64 cols, breaking Arrow
                 yield pd.DataFrame(out)
 
@@ -181,12 +203,10 @@ ANNOTATED_SCHEMA = ST.StructType(
 
 
 def annotate_documents(sentences: DataFrame, dico_bc, context_bc=None,
-                       cfg: SearchConfig | None = None,
-                       deid_scrub: bool = True,
-                       negex: bool = False) -> DataFrame:
+                       cfg: SearchConfig | None = None) -> DataFrame:
     """P2+P3 fused: per document (groupBy doc_id, applyInPandas), run the
     matcher, then the acronym doc-pass (F1/F2 — the only doc-scoped state),
-    then ConText modifier assignment (F3/F4) or NegEx (F5) per sentence.
+    then ConText modifier assignment (F3/F4) per sentence.
 
     This is the reference's per-sentence chain (NobleCoder.process:312-336:
     terminology -> AcronymDetector -> ConText) lifted onto Spark: one
@@ -209,7 +229,6 @@ def annotate_documents(sentences: DataFrame, dico_bc, context_bc=None,
         from ..context.acronyms import AcronymState
         from ..context.context import (ConTextEngine, ModifierOut,
                                        _add_modifier)
-        from ..context import negex as NX
 
         dico: Dictionary = dico_bc.value if hasattr(dico_bc, "value") else dico_bc
         engine = None
@@ -221,10 +240,12 @@ def annotate_documents(sentences: DataFrame, dico_bc, context_bc=None,
         state: AcronymState | None = None
         cur_doc = None
         section_mods: list = []
-        # per-doc buffers: rows await the doc flush so paragraph-action
+        # the current doc's rows await its flush so paragraph-action
         # modifiers (which scope beyond their sentence, backward included)
         # can be applied before emission (ConText.getMatchingModifiers)
-        buf_rows: list[dict] = []
+        buf = mention_columns()
+        buf_slot: list = []      # per buffered row: ConText slot or None
+        buf_pid: list[int] = []  # per buffered row: paragraph id
         buf_para: list[tuple] = []  # (pid, action, abs_start, abs_end, ModifierOut)
         out: dict[str, list] = {f.name: [] for f in ANNOTATED_SCHEMA.fields}
 
@@ -232,16 +253,16 @@ def annotate_documents(sentences: DataFrame, dico_bc, context_bc=None,
             for pid, action, a_start, a_end, val in buf_para:
                 if pid < 0:
                     continue
-                for row in buf_rows:
-                    if row["_pid"] != pid:
+                for start, end, slot, row_pid in zip(
+                        buf["start"], buf["end"], buf_slot, buf_pid):
+                    if row_pid != pid:
                         continue
-                    before = a_end <= row["start"]   # modifier before target
-                    after = a_start >= row["end"]    # modifier after target
+                    before = a_end <= start   # modifier before target
+                    after = a_start >= end    # modifier after target
                     if not ((action in ("forward", "bidirectional") and before)
                             or (action in ("backward", "bidirectional")
                                 and after)):
                         continue
-                    slot = row["_slot"]
                     cur = slot.get(val.type, [])
                     # local sentence modifiers win (NobleMentions:158-169)
                     if all(m.is_default for m in cur):
@@ -249,18 +270,16 @@ def annotate_documents(sentences: DataFrame, dico_bc, context_bc=None,
                             slot,
                             ModifierOut(type=val.type, value=val.value,
                                         start=a_start, end=a_end),
-                            SimpleNamespace(start=row["start"],
-                                            end=row["end"]))
-            for row in buf_rows:
-                slot = row.pop("_slot")
-                row.pop("_pid")
-                if slot is not None:
-                    row["modifiers"] = {
-                        t: ",".join(m.value for m in lst)
-                        for t, lst in slot.items()}
-                for k, v in row.items():
-                    out[k].append(v)
-            buf_rows.clear()
+                            SimpleNamespace(start=start, end=end))
+            for name, col in buf.items():
+                out[name].extend(col)
+                col.clear()
+            out["modifiers"].extend(
+                {} if slot is None else
+                {t: ",".join(m.value for m in lst) for t, lst in slot.items()}
+                for slot in buf_slot)
+            buf_slot.clear()
+            buf_pid.clear()
             buf_para.clear()
 
         for pdf in batches:
@@ -272,65 +291,43 @@ def annotate_documents(sentences: DataFrame, dico_bc, context_bc=None,
                     cur_doc = doc_id
                     state = AcronymState(dico)  # cleared per doc (:273)
                     section_mods = []
-                stext = SP.filter_deid_tags(text) if deid_scrub else text
 
                 # section headers aren't coded, but section-action
                 # modifiers found in them scope every mention until the
                 # next header (ConText HAS_SECTION_ACTION; headers survive
                 # only when the caller split with filter_headers=False)
                 if sent_type == SP.TYPE_HEADER:
-                    section_mods = (engine.section_modifiers(stext)
-                                    if engine is not None else [])
+                    section_mods = (
+                        engine.section_modifiers(SP.filter_deid_tags(text))
+                        if engine is not None else [])
                     continue
 
-                mentions = process_sentence(stext, dico, cfg)
-                mentions = state.process(stext, mentions)
-
-                slots_out: list
-                if engine is not None:
-                    slots, global_mods = engine.process_with_globals(
-                        stext, mentions)
-                    for slot, target in zip(slots, mentions):
-                        for smod in section_mods:
-                            # local sentence modifiers win over section
-                            # scope (NobleMentions.process:158-169)
-                            cur = slot.get(smod.type, [])
-                            if all(m.is_default for m in cur):
-                                _add_modifier(slot, smod, target)
-                    slots_out = slots
-                    # paragraph-action modifiers scope to the whole
-                    # paragraph; collected here, applied at the doc flush
-                    for gm in global_mods:
-                        ga = engine.global_action(gm.cui)
-                        if ga is None or ga[0] != "paragraph":
-                            continue
-                        for val in engine.modifier_values(gm):
-                            buf_para.append((int(pid), ga[1],
-                                             int(offset) + gm.start,
-                                             int(offset) + gm.end, val))
-                elif negex:
-                    nmods = NX.process(stext, mentions)
-                    slots_out = [
-                        {m.type: [m] for m in lst} for lst in nmods]
-                else:
-                    slots_out = [None] * len(mentions)
-
-                for m, slot in zip(mentions, slots_out):
-                    anns = [{"text": t, "offset": int(offset) + o}
-                            for t, o in m.annotations]
-                    start = anns[0]["offset"] if anns else -1
-                    end = (max(a["offset"] + len(a["text"]) for a in anns)
-                           if anns else -1)
-                    buf_rows.append({
-                        "doc_id": doc_id, "sent_id": int(sent_id),
-                        "cui": m.cui, "concept_name": m.concept_name,
-                        "matched_term": m.matched_term,
-                        "normalized_term": m.normalized_term,
-                        "score": float(m.score), "annotations": anns,
-                        "start": start, "end": end,
-                        "sem_types": list(m.sem_types),
-                        "sources": list(m.sources),
-                        "modifiers": {}, "_slot": slot, "_pid": int(pid)})
+                stext, mentions = match_sentence(buf, doc_id, sent_id, text,
+                                                 offset, dico, cfg, state)
+                buf_pid.extend([int(pid)] * len(mentions))
+                if engine is None:
+                    buf_slot.extend([None] * len(mentions))
+                    continue
+                slots, global_mods = engine.process_with_globals(
+                    stext, mentions)
+                for slot, target in zip(slots, mentions):
+                    for smod in section_mods:
+                        # local sentence modifiers win over section
+                        # scope (NobleMentions.process:158-169)
+                        cur = slot.get(smod.type, [])
+                        if all(m.is_default for m in cur):
+                            _add_modifier(slot, smod, target)
+                buf_slot.extend(slots)
+                # paragraph-action modifiers scope to the whole
+                # paragraph; collected here, applied at the doc flush
+                for gm in global_mods:
+                    ga = engine.global_action(gm.cui)
+                    if ga is None or ga[0] != "paragraph":
+                        continue
+                    for val in engine.modifier_values(gm):
+                        buf_para.append((int(pid), ga[1],
+                                         int(offset) + gm.start,
+                                         int(offset) + gm.end, val))
             # end of Arrow batch: emit completed docs (the current doc may
             # continue in the next batch, its rows stay buffered)
             if out["doc_id"]:
@@ -345,6 +342,16 @@ def annotate_documents(sentences: DataFrame, dico_bc, context_bc=None,
             .repartition(spark_parallelism, "doc_id")
             .sortWithinPartitions("doc_id", "sent_id")
             .mapInPandas(gen, schema=ANNOTATED_SCHEMA))
+
+
+def match_stage(sentences: DataFrame, dico_bc, context_bc=None,
+                cfg: SearchConfig | None = None) -> DataFrame:
+    """The match-stage decision of every pipeline entry point: with a
+    modifier terminology the fused doc-level annotate pass (P2+P3, one
+    shuffle on doc_id), otherwise the fully narrow ``detect_mentions``."""
+    if context_bc is not None:
+        return annotate_documents(sentences, dico_bc, context_bc, cfg)
+    return detect_mentions(sentences, dico_bc, cfg)
 
 
 def dedup_redundant_mentions(mentions: DataFrame) -> DataFrame:
@@ -408,18 +415,15 @@ def run_pipeline(spark: SparkSession, documents: DataFrame, dico: Dictionary,
                  method: str | None = None, salt_buckets: int = 0,
                  context_dico: Dictionary | None = None,
                  ) -> dict[str, DataFrame]:
-    """End-to-end P0->P6. Without a modifier terminology the match stage is
-    fully narrow (mapInPandas); with one, the fused doc-level annotate pass
-    (P2+P3) runs instead — one shuffle on doc_id. Returns all frames."""
+    """End-to-end P0->P6, with the match stage ``match_stage`` picks.
+    Returns all frames."""
     cfg = for_search_method(method)
-    dico_bc = spark.sparkContext.broadcast(dico)
+    sc = spark.sparkContext
     docs = salt_documents(documents, salt_buckets)
     sentences = split_sentences(docs)
-    if context_dico is not None:
-        context_bc = spark.sparkContext.broadcast(context_dico)
-        mentions = annotate_documents(sentences, dico_bc, context_bc, cfg)
-    else:
-        mentions = detect_mentions(sentences, dico_bc, cfg)
+    context_bc = (sc.broadcast(context_dico) if context_dico is not None
+                  else None)
+    mentions = match_stage(sentences, sc.broadcast(dico), context_bc, cfg)
     triples = materialize_triples(mentions, spark, dico)
     return {"documents": docs, "sentences": sentences,
             "mentions": mentions, "triples": triples}

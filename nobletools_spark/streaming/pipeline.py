@@ -20,8 +20,7 @@ from pyspark.sql import functions as F
 
 from ..config import for_search_method
 from ..pipeline.documents import DOCUMENTS_SCHEMA
-from ..pipeline.stages import (annotate_documents, detect_mentions,
-                               split_sentences)
+from ..pipeline.stages import match_stage, split_sentences
 
 
 def read_document_stream(spark: SparkSession, path: str,
@@ -46,11 +45,8 @@ def mention_stream_writer(docs_stream: DataFrame, dico_bc, sink_fn,
     cfg = for_search_method(method)
 
     def run_batch(batch_df: DataFrame, batch_id: int):
-        sentences = split_sentences(batch_df)
-        if context_bc is not None:
-            mentions = annotate_documents(sentences, dico_bc, context_bc, cfg)
-        else:
-            mentions = detect_mentions(sentences, dico_bc, cfg)
+        mentions = match_stage(split_sentences(batch_df), dico_bc,
+                               context_bc, cfg)
         sink_fn(mentions, batch_id)
 
     writer = docs_stream.writeStream.foreachBatch(run_batch)
@@ -100,11 +96,8 @@ def triple_stream_writer(docs_stream: DataFrame, dico_bc, dico,
                  if checkpoint_dir else uuid.uuid4().hex[:12])
 
     def run_batch(batch_df: DataFrame, batch_id: int):
-        sentences = split_sentences(batch_df)
-        if context_bc is not None:
-            mentions = annotate_documents(sentences, dico_bc, context_bc, cfg)
-        else:
-            mentions = detect_mentions(sentences, dico_bc, cfg)
+        mentions = match_stage(split_sentences(batch_df), dico_bc,
+                               context_bc, cfg)
         triples = materialize_triples(mentions, batch_df.sparkSession, dico,
                                       include_isa=False)
         SnapshotTable(batch_df.sparkSession, table_root).append_once(

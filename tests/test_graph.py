@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from nobletools_spark.graph.canonicalize import (canonical_map,
                                                  canonicalize_mentions,
-                                                 connected_components,
                                                  synonym_edges, xref_edges)
 from nobletools_spark.graph.hierarchy import (ancestors_closure,
                                               has_ancestor, isa_edges_df,
@@ -143,14 +142,18 @@ class TestCanonicalize:
         assert got == {("A", "B")}
 
     def test_connected_components_chain_and_star(self, spark):
-        e = spark.createDataFrame(
-            [("b", "a"), ("c", "b"), ("d", "c"),      # chain a-b-c-d
-             ("x", "y"), ("x", "z")],                 # star x-{y,z}
-            "src string, dst string")
-        cc = {r.cui: r.canonical_cui
-              for r in connected_components(e).collect()}
+        # one shared term per edge: chain a-b-c-d, star x-{y,z}, and a
+        # 40-node chain (diameter 39, i.e. 39 min-label propagation rounds)
+        chain40 = [f"c{i:02d}" for i in range(40)]
+        terms = ([["a", "b"], ["b", "c"], ["c", "d"], ["x", "y", "z"]]
+                 + [list(p) for p in zip(chain40, chain40[1:])])
+        ti = spark.createDataFrame(
+            [(f"t{i}", cuis) for i, cuis in enumerate(terms)],
+            "term string, cuis array<string>")
+        cc = {r.cui: r.canonical_cui for r in canonical_map(ti).collect()}
         assert cc == {"a": "a", "b": "a", "c": "a", "d": "a",
-                      "x": "x", "y": "x", "z": "x"}
+                      "x": "x", "y": "x", "z": "x",
+                      **{c: "c00" for c in chain40}}
 
     def test_canonical_map_merges_shared_synonym(self, spark):
         from nobletools_spark.terminology.build import build_terminology

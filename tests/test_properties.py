@@ -1,8 +1,8 @@
 """Property-based tests (hypothesis) over the pure-Python core: the
 round-trip self-retrieval invariant on random terminologies, normalization
 stability, span validity — plus randomized union-find oracles for the
-connected-components canonicalizer (parametrized seeds, driver-side
-oracle)."""
+connected-components engine, on both its driver and distributed branches
+(parametrized seeds, driver-side oracle)."""
 
 import random
 import string
@@ -166,7 +166,7 @@ class TestConnectedComponentsOracle:
         return out
 
     def test_random_graphs_match_union_find(self, spark):
-        from nobletools_spark.graph.canonicalize import connected_components
+        from nobletools_spark.textdata.dedup import candidate_components
         for seed in (1, 7, 23):
             rng = random.Random(seed)
             nodes = [f"n{i:03d}" for i in range(40)]
@@ -174,7 +174,10 @@ class TestConnectedComponentsOracle:
                      for _ in range(35)]
             edges = [(a, b) for a, b in edges if a != b]
             expected = self._union_find(edges, {x for e in edges for x in e})
-            df = spark.createDataFrame(edges, "src string, dst string")
-            got = {r.cui: r.canonical_cui
-                   for r in connected_components(df).collect()}
-            assert got == expected, f"seed {seed}"
+            df = spark.createDataFrame(edges, "a string, b string")
+            # default threshold: driver union-find; 0: distributed
+            # min-label propagation
+            for threshold in (1_000_000, 0):
+                got = {r.doc_id: r.comp for r in candidate_components(
+                    df, driver_threshold=threshold).collect()}
+                assert got == expected, f"seed {seed}, threshold {threshold}"

@@ -37,6 +37,13 @@ def keyset(df):
 
 class TestShuffleMatchParity:
     def test_matches_broadcast_compacted_path(self, spark, tables, sentences):
+        from nobletools_spark.pipeline.stages import SENTENCES_SCHEMA
+        # both paths match the text with DeID tags blanked out
+        deid = spark.createDataFrame(
+            [("deid", 0, "Prose",
+              "Seen by **NAME[melanoma] for follow up of melanoma.", 0, -1)],
+            schema=SENTENCES_SCHEMA)
+        sentences = sentences.unionByName(deid)
         # broadcast twin: compact WT table, no blacklist shortcut
         dico = dictionary_from_tables(tables)
         dico.word_map = {r.word: tuple(r.terms)
@@ -51,6 +58,8 @@ class TestShuffleMatchParity:
             base_dico=dico)
         assert keyset(shuffle_out) == keyset(broadcast_out)
         assert shuffle_out.count() > 0
+        assert [r.cui for r in shuffle_out.where("doc_id = 'deid'")
+                .collect()] == ["C0025202"]
 
     def test_empty_sentence_safe(self, spark, tables):
         from pyspark.sql import types as ST
