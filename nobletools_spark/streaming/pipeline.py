@@ -249,9 +249,9 @@ def incremental_dedup_stream(docs_stream: DataFrame, state_dir: str,
     alternative for exact dups only)."""
     from pyspark.errors import AnalysisException
 
-    from ..textdata.dedup import (band_keys, cache_scope, minhash_dup_pairs,
-                                  minhash_incremental_pairs_from_state,
-                                  minhash_signatures, shingle_array)
+    from ..textdata.dedup import (cache_scope, minhash_band_keys,
+                                  minhash_dup_pairs,
+                                  minhash_incremental_pairs_from_state)
 
     keys_path = state_dir.rstrip("/") + "/band_keys"
     texts_path = state_dir.rstrip("/") + "/texts"
@@ -297,8 +297,7 @@ def incremental_dedup_stream(docs_stream: DataFrame, state_dir: str,
         # keys without text make the doc a candidate whose verify join
         # (inner on the text lookup) silently drops every pair.
         batch.write.mode("append").parquet(texts_path)
-        new_keys = band_keys(minhash_signatures(
-            shingle_array(batch, text_col)))
+        new_keys = minhash_band_keys(batch, text_col)
         new_keys.write.mode("append").parquet(keys_path)
 
     writer = docs_stream.writeStream.foreachBatch(run_batch)

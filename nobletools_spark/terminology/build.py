@@ -108,14 +108,18 @@ def select_preferred_names(concepts: DataFrame) -> DataFrame:
     return concepts.withColumn("name", name)
 
 
-@F.pandas_udf(ST.ArrayType(ST.StringType()))
-def _word_split(terms: pd.Series) -> pd.Series:
+def _word_split_udf():
     """Term -> words via the REAL tokenizer (TextTools.getWords), not
     split(' '): normalized terms can carry protected periods (e.g. 'a.0',
     the float-protect trick) that getWords splits differently — the
     driver-side build and matcher both use getWords, so the Spark build
-    must too (parity edge case found by property testing)."""
-    return pd.Series([T.get_words(t) for t in terms])
+    must too (parity edge case found by property testing). Built per call
+    like every UDF here: a module-level pandas UDF binds the first
+    SparkContext and breaks after a session restart."""
+    @F.pandas_udf(ST.ArrayType(ST.StringType()))
+    def _word_split(terms: pd.Series) -> pd.Series:
+        return pd.Series([T.get_words(t) for t in terms])
+    return _word_split
 
 
 def _normalized_terms_udf(cfg: SearchConfig):
@@ -146,7 +150,7 @@ def build_tables(concepts: DataFrame, cfg: SearchConfig | None = None
                   .agg(F.sort_array(F.collect_set("cui")).alias("cuis")))
 
     word_pairs = plain.select(
-        "cui", "term", F.explode(_word_split("term")).alias("word"))
+        "cui", "term", F.explode(_word_split_udf()("term")).alias("word"))
     word_index = (word_pairs.groupBy("word")
                   .agg(F.sort_array(F.collect_set("term")).alias("terms")))
     word_stats = (word_pairs.groupBy("word")
@@ -210,7 +214,7 @@ def compact_word_index(term_index: DataFrame, word_stats: DataFrame) -> DataFram
     is one posexplode + broadcast-join + window argmin + groupBy — the
     shuffle is on `term` (argmin) then `word` (regroup)."""
     words = (term_index
-             .select("term", F.posexplode(_word_split("term"))
+             .select("term", F.posexplode(_word_split_udf()("term"))
                      .alias("pos", "word"))
              .where(F.length("word") > 1))
     joined = words.join(F.broadcast(word_stats.select("word", "term_count")),

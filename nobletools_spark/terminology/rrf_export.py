@@ -58,10 +58,13 @@ def _rank_ids(df: DataFrame, key: str, out: str, fmt: str,
     return both.select(F.col("_key").alias(key), F.col("_id").alias(out))
 
 
-@F.pandas_udf("string")
-def _normalized(text: pd.Series) -> pd.Series:
-    from ..text.tools import normalize
-    return text.map(lambda t: normalize(t or ""))
+def _normalized_udf():
+    # built per call: a module-level pandas UDF needs a session at import
+    @F.pandas_udf("string")
+    def _normalized(text: pd.Series) -> pd.Series:
+        from ..text.tools import normalize
+        return text.map(lambda t: normalize(t or ""))
+    return _normalized
 
 
 def _prepare(concepts: DataFrame):
@@ -99,7 +102,7 @@ def _prepare(concepts: DataFrame):
                 F.col("t.text").alias("STR"),
                 F.coalesce(F.col("t.form"), F.lit("SY")).alias("TTY")))
     lui_src = atoms.select("STR").distinct() \
-        .withColumn("_norm", _normalized("STR"))
+        .withColumn("_norm", _normalized_udf()("STR"))
     lui_map = _rank_ids(lui_src.select("_norm"), "_norm", "LUI", "L%07d") \
         .join(lui_src, "_norm").select("STR", "LUI")
     sui_map = _rank_ids(atoms, "STR", "SUI", "S%07d")

@@ -29,6 +29,7 @@ from __future__ import annotations
 import contextlib
 import hashlib
 import struct
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -119,6 +120,76 @@ def minhash_signatures(shingled: DataFrame,
         F.array_min(F.transform("_hs", lambda h: F.xxhash64(i, h))),
         F.xxhash64(F.lit(-1) - i, F.col("doc_id"))))
     return with_hs.select("doc_id", "shingles", sig.alias("sig"))
+
+
+# ------------------------------------- banded buckets, every LSH family --
+# MinHash, SimHash and embedding sign-LSH all bucket on (band, h) with
+# ``bucket_keys``; the pair families pair ids with ``bucket_pairs`` and
+# verify exactly, while ``lsh_candidate_pairs`` emits stars instead.
+
+def bucket_keys(df: DataFrame, id_col: str | tuple, keys: list) -> DataFrame:
+    """-> (id, band, h): one row per input row per band, ``h = keys[band]``
+    and the id column keeps its name. ``id_col`` names the row id; a tuple
+    of names packs them into ONE struct id, row id first (so ids order by
+    row id), whose payload rides through ``bucket_pairs`` without a join
+    back. Rows with a null row id are dropped here, once for every family:
+    they can never be a pair, and a struct id around a null would still
+    compare (nulls sort first)."""
+    cols = [id_col] if isinstance(id_col, str) else list(id_col)
+    rid = cols[0] if len(cols) == 1 else F.struct(*cols).alias(cols[0])
+    bk = [F.struct(F.lit(b).alias("band"), h.alias("h"))
+          for b, h in enumerate(keys)]
+    return (df.where(F.col(cols[0]).isNotNull())
+            .select(rid, F.explode(F.array(*bk)).alias("bk"))
+            .select(cols[0], "bk.band", "bk.h"))
+
+
+def bucket_pairs(x: DataFrame, y: DataFrame) -> DataFrame:
+    """-> distinct (a, b): an id of ``x`` and an id of ``y`` (both
+    ``bucket_keys`` tables) sharing a (band, h) bucket. Only ids pass the
+    join and the dedup shuffle; payloads re-attach after the (much
+    smaller) distinct. Self-pairs: ``bucket_pairs(k, k).where(a < b)`` —
+    the filter pushes into the join. Both sides keep their plans (aliased,
+    not renamed), so a self-join reuses one exchange."""
+    return (x.alias("x").join(y.alias("y"), ["band", "h"])
+            .select(F.col("x." + x.columns[0]).alias("a"),
+                    F.col("y." + y.columns[0]).alias("b"))
+            .distinct())
+
+
+def band_keys(signatures: DataFrame, bands: int = DEFAULT_BANDS,
+              num_hashes: int = DEFAULT_NUM_HASHES) -> DataFrame:
+    """-> (doc_id, band, h): the banded LSH bucket keys — the PERSISTED
+    STATE of incremental dedup, and the banding stage
+    ``lsh_candidate_pairs`` builds on. At corpus scale this table is
+    written once (k/bands hashes folded per band, 3 longs per row),
+    partitioned/bucketed by (band, h); a daily delta probes it with an
+    equi-join that shuffles only the delta."""
+    rows = num_hashes // bands
+    # element_at past the array end yields NULL (non-ANSI) which would
+    # silently collapse a band into one constant bucket — fail loudly if
+    # the caller's num_hashes disagrees with the signature stage's
+    len_ok = F.assert_true(
+        F.size("sig") == num_hashes,
+        F.concat(F.lit("band_keys: size(sig) != num_hashes="),
+                 F.lit(str(num_hashes)), F.lit(" for doc "), F.col("doc_id")))
+
+    def _band_hash(b: int):
+        h = F.xxhash64(*[F.element_at("sig", b * rows + r + 1)
+                         for r in range(rows)])
+        # fold the assertion into band 0 so column pruning can't drop it
+        return F.when(len_ok.isNull(), h) if b == 0 else h
+
+    return bucket_keys(signatures, "doc_id",
+                       [_band_hash(b) for b in range(bands)])
+
+
+def minhash_band_keys(docs: DataFrame, text_col: str = "text",
+                      num_hashes: int = DEFAULT_NUM_HASHES,
+                      bands: int = DEFAULT_BANDS) -> DataFrame:
+    """(doc_id, text) documents -> shingles -> MinHash -> ``band_keys``."""
+    return band_keys(minhash_signatures(shingle_array(docs, text_col),
+                                        num_hashes), bands, num_hashes)
 
 
 def lsh_candidate_pairs(signatures: DataFrame,
@@ -247,16 +318,28 @@ def oversize_components(components: DataFrame,
             .where(F.col("n_docs") > max_component))
 
 
-def verify_jaccard(pairs: DataFrame, shingled: DataFrame,
+def candidate_shingles(docs: DataFrame, pairs: DataFrame, sides: tuple,
+                       text_col: str = "text") -> DataFrame:
+    """Shingle ONLY the documents named in the ``sides`` columns of
+    ``pairs`` (semi-join the raw docs first): the candidate set is
+    output-bounded, so this avoids a second corpus-wide shingle pass."""
+    ids = reduce(DataFrame.unionByName,
+                 [pairs.select(F.col(c).alias("doc_id")) for c in sides])
+    return shingle_array(docs.join(ids.distinct(), "doc_id", "left_semi"),
+                         text_col)
+
+
+def verify_jaccard(pairs: DataFrame, sh_a: DataFrame, sh_b: DataFrame,
                    threshold: float) -> DataFrame:
-    """Exact Jaccard on candidate pairs -> (a, b, jaccard). The pair list
-    is output-bounded (tiny next to the corpus); AQE plans these joins as
-    broadcasts at runtime — an explicit broadcast hint here measured
-    SLOWER (it serializes the exchanges on the driver)."""
-    sa = shingled.select(F.col("doc_id").alias("a"),
-                         F.col("shingles").alias("_sa"))
-    sb = shingled.select(F.col("doc_id").alias("b"),
-                         F.col("shingles").alias("_sb"))
+    """Exact Jaccard on candidate pairs -> (a, b, jaccard), with ``a``
+    looked up in ``sh_a`` and ``b`` in ``sh_b`` (both (doc_id, shingles)).
+    The pair list is output-bounded (tiny next to the corpus); AQE plans
+    these joins as broadcasts at runtime — an explicit broadcast hint here
+    measured SLOWER (it serializes the exchanges on the driver)."""
+    sa = sh_a.select(F.col("doc_id").alias("a"),
+                     F.col("shingles").alias("_sa"))
+    sb = sh_b.select(F.col("doc_id").alias("b"),
+                     F.col("shingles").alias("_sb"))
     inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
     union = (F.size("_sa") + F.size("_sb")
              - F.size(F.array_intersect("_sa", "_sb"))).cast("double")
@@ -293,15 +376,8 @@ def minhash_dup_pairs(df: DataFrame, text_col: str = "text",
     # the candidate pair list is consumed twice (semi-join prefilter +
     # verify broadcast) and is output-bounded: cache it
     cand = _track_cache(component_pairs(comp, max_component))
-    cand_ids = (cand.select(F.col("a").alias("doc_id"))
-                .unionByName(cand.select(F.col("b").alias("doc_id")))
-                .distinct())
-    # re-shingle ONLY the candidate documents (semi-join the raw docs
-    # first): the candidate set is output-bounded, so this avoids a second
-    # corpus-wide shingle pass entirely
-    cand_docs = df.join(cand_ids, "doc_id", "left_semi")
-    sh_cand = shingle_array(cand_docs, text_col)
-    return verify_jaccard(cand, sh_cand, threshold)
+    sh_cand = candidate_shingles(df, cand, ("a", "b"), text_col)
+    return verify_jaccard(cand, sh_cand, sh_cand, threshold)
 
 
 def minhash_dup_groups(df: DataFrame, text_col: str = "text",
@@ -317,33 +393,6 @@ def minhash_dup_groups(df: DataFrame, text_col: str = "text",
                                  bands, max_component)
     return (candidate_components(verified.select("a", "b"))
             .select("doc_id", F.col("comp").alias("group_id")))
-
-
-def minhash_dup_report(df: DataFrame, text_col: str = "text",
-                       threshold: float = 0.8,
-                       num_hashes: int = DEFAULT_NUM_HASHES,
-                       bands: int = DEFAULT_BANDS,
-                       max_component: int = 1000) -> dict:
-    """Coverage metrics for the LSH pipeline (counts run Spark actions):
-    candidate stars, components, oversize components excluded from pair
-    listing (the previously-silent drop), verified pairs."""
-    sh = shingle_array(df, text_col)
-    sig = minhash_signatures(sh, num_hashes)
-    star = lsh_candidate_pairs(sig, bands, num_hashes)
-    comp = candidate_components(star).cache()
-    over = oversize_components(comp, max_component)
-    pairs = minhash_dup_pairs(df, text_col, threshold, num_hashes, bands,
-                              max_component)
-    out = {
-        "candidate_star_edges": star.count(),
-        "candidate_components": comp.select("comp").distinct().count(),
-        "oversize_components_excluded": over.count(),
-        "oversize_docs_excluded": (over.agg(F.sum("n_docs")).collect()[0][0]
-                                   or 0),
-        "verified_pairs": pairs.count(),
-    }
-    comp.unpersist()
-    return out
 
 
 def exact_jaccard_pairs(df: DataFrame, text_col: str = "text",
@@ -417,26 +466,18 @@ def simhash_neardup_pairs(df: DataFrame, text_col: str = "text",
                           max_hamming: int = 3) -> DataFrame:
     """SimHash near-dups: split the 64-bit signature into 4 16-bit bands
     (pigeonhole: hamming<=3 => at least one band identical), equi-join per
-    band, verify with JVM-side ``bit_count(a ^ b)``."""
+    band, verify with JVM-side ``bit_count(a ^ b)``. The signature rides
+    inside the struct id, so the pandas UDF runs once per document (a join
+    back to the signatures re-ran it per join side)."""
     sig = simhash_signatures(df, text_col)
-    bands = [
-        F.struct(F.lit(b).alias("band"),
-                 F.shiftrightunsigned("simhash", b * 16)
-                 .bitwiseAND(F.lit(0xFFFF)).alias("key"))
-        for b in range(4)
-    ]
-    ex = (sig.select("doc_id", "simhash",
-                     F.explode(F.array(*bands)).alias("bk"))
-          .select("doc_id", "simhash", "bk.band", "bk.key"))
-    cand = (ex.alias("x").join(ex.alias("y"), ["band", "key"])
-            .where(F.col("x.doc_id") < F.col("y.doc_id"))
-            .select(F.col("x.doc_id").alias("a"),
-                    F.col("y.doc_id").alias("b"),
-                    F.col("x.simhash").alias("sa"),
-                    F.col("y.simhash").alias("sb"))
-            .distinct())
-    hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-    return (cand.select("a", "b", hamming.alias("hamming"))
+    keys = bucket_keys(sig, ("doc_id", "simhash"), [
+        F.shiftrightunsigned("simhash", b * 16).bitwiseAND(F.lit(0xFFFF))
+        for b in range(4)])
+    cand = bucket_pairs(keys, keys).where(F.col("a") < F.col("b"))
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    return (cand.select(F.col("a.doc_id").alias("a"),
+                        F.col("b.doc_id").alias("b"),
+                        hamming.alias("hamming"))
             .where(F.col("hamming") <= max_hamming))
 
 
@@ -493,27 +534,12 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
             .where(F.col("cosine") >= threshold))
 
 
-def _plane_projection(vec_col, plane: int):
-    """Dot product of a vector column with a deterministic pseudo-random
-    hyperplane whose component d is xxhash64(plane, d) scaled to
-    [-0.5, 0.5) — derived entirely JVM-side from the element index, so no
-    driver probe is needed to learn the vector dimension and the plane is
-    identical on every executor/run."""
-    idx = F.sequence(F.lit(1), F.size(vec_col))
-    return F.aggregate(
-        F.zip_with(vec_col, idx,
-                   lambda x, i: x * (F.xxhash64(F.lit(plane), i)
-                                     / F.lit(float(2 ** 64)))),
-        F.lit(0.0), lambda acc, x: acc + x)
-
-
 def _md5_planes(planes: int, dim: int) -> list[list[float]]:
     """Deterministic hyperplane matrix derived from md5 so an external
     SQL engine can re-derive every component independently: component d
     (1-based) of plane p is int(md5(f"{p}:{d}")[:15], 16) / 2^60 - 0.5.
     The /2^60 and -0.5 steps are exact in float64, so Python, the JVM,
     and DuckDB all hold the identical double."""
-    import hashlib
     return [[int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[:15], 16)
              / float(2 ** 60) - 0.5 for d in range(1, dim + 1)]
             for p in range(planes)]
@@ -523,48 +549,33 @@ def embedding_lsh_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
                                 vec_col: str = "embedding",
                                 threshold: float = 0.45,
                                 planes: int = 16,
-                                bands: int = 8,
-                                dim: int | None = None) -> DataFrame:
+                                bands: int = 8, *,
+                                dim: int) -> DataFrame:
     """Scale path: random-hyperplane LSH — bucket vectors by the sign
     pattern of ``planes`` projections split into ``bands`` bands, self-join
     per (band, key) bucket, verify exact cosine. Same output contract as
     the brute-force pairs; recall < 1 by construction (probabilistic).
 
-    With ``dim`` (the embedding dimension, static schema knowledge) the
-    hyperplanes become md5-derived LITERAL arrays: faster (no per-row
-    hashing — the plane matrix is a plan constant riding the closure like
-    a broadcast) and externally checkable (the DuckDB oracle re-derives
-    the same planes from md5 and recomputes buckets + cosines exactly).
-    Without ``dim`` the xxhash64 per-row derivation handles unknown
-    dimensions."""
+    ``dim`` (the embedding dimension, static schema knowledge) sizes the
+    md5-derived LITERAL hyperplanes: no per-row hashing (the plane matrix
+    is a plan constant riding the closure like a broadcast) and externally
+    checkable (the DuckDB oracle re-derives the same planes from md5 and
+    recomputes buckets + cosines exactly)."""
     u = df.select(F.col(id_col).alias("id"), _unit(F.col(vec_col)).alias("v"))
-
-    plane_mat = _md5_planes(planes, dim) if dim is not None else None
-
-    def proj(p: int):
-        if plane_mat is None:
-            return _plane_projection(F.col("v"), p)
-        lit = F.array(*[F.lit(c) for c in plane_mat[p]])
-        return F.aggregate(F.zip_with(F.col("v"), lit, lambda x, c: x * c),
-                           F.lit(0.0), lambda acc, x: acc + x)
-
-    bits = [F.when(proj(p) > 0, 1).otherwise(0) for p in range(planes)]
+    bits = [F.when(cosine_expr(F.col("v"), F.array(*map(F.lit, plane))) > 0,
+                   1).otherwise(0)
+            for plane in _md5_planes(planes, dim)]
     per_band = planes // bands
-    band_cols = [
-        F.struct(F.lit(b).alias("band"),
-                 F.concat_ws("", *[bits[b * per_band + r].cast("string")
-                                   for r in range(per_band)]).alias("key"))
-        for b in range(bands)
-    ]
+    keys = [F.concat_ws("", *[bits[b * per_band + r].cast("string")
+                              for r in range(per_band)])
+            for b in range(bands)]
     # candidates carry IDS ONLY through the per-bucket self-join and the
     # dedup: dragging both dim-length vectors through the distinct
     # shuffles ~16*dim bytes per duplicate candidate row (measured 4x the
     # whole pipeline at sf0.1's bucket occupancy); the vectors re-attach
     # AFTER dedup via two joins against the (tiny, often broadcast)
-    # normalized-vector table
-    ex = (u.select("id", F.explode(F.array(*band_cols)).alias("bk"))
-          .select("id", "bk.band", "bk.key"))
-    # explicit repartition on the join key, for two reasons a .cache()
+    # normalized-vector table.
+    # Explicit repartition on the join key, for two reasons a .cache()
     # CANNOT deliver inside a single action (both self-join sides race
     # before the cache materializes): (1) the exchange is REUSED by both
     # sides, so the `planes` interpreted projections run once per vector
@@ -575,11 +586,8 @@ def embedding_lsh_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
     # (Measured at sf0.1/0.4: candidate stage 9.5 s -> 2.4 s.)
     parts = max(df.sparkSession.sparkContext.defaultParallelism * 2,
                 bands * 2)
-    ex = ex.repartition(parts, "band", "key")
-    cand = (ex.alias("x").join(ex.alias("y"), ["band", "key"])
-            .where(F.col("x.id") < F.col("y.id"))
-            .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-            .distinct())
+    ex = bucket_keys(u, "id", keys).repartition(parts, "band", "h")
+    cand = bucket_pairs(ex, ex).where(F.col("a") < F.col("b"))
     va = u.select(F.col("id").alias("a"), F.col("v").alias("va"))
     vb = u.select(F.col("id").alias("b"), F.col("v").alias("vb"))
     cos = cosine_expr(F.col("va"), F.col("vb"))
@@ -591,8 +599,8 @@ def embedding_lsh_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
 def embedding_dup_groups(df: DataFrame, id_col: str = "vec_id",
                          vec_col: str = "embedding",
                          threshold: float = 0.45,
-                         planes: int = 16, bands: int = 8,
-                         dim: int | None = None) -> DataFrame:
+                         planes: int = 16, bands: int = 8, *,
+                         dim: int) -> DataFrame:
     """-> (vec_id, group_id): semantic duplicate GROUPS — connected
     components over the verified cosine near-dup pair graph (SemDeDup
     shape: keep one representative per semantic cluster). The linear
@@ -602,7 +610,7 @@ def embedding_dup_groups(df: DataFrame, id_col: str = "vec_id",
     listing with a per-doc group label; group_id = min vec_id reachable.
     Only vectors in at least one verified pair appear."""
     pairs = embedding_lsh_neardup_pairs(df, id_col, vec_col, threshold,
-                                        planes, bands, dim)
+                                        planes, bands, dim=dim)
     return (candidate_components(pairs.select("a", "b"))
             .select(F.col("doc_id").alias("vec_id"),
                     F.col("comp").alias("group_id")))
@@ -670,36 +678,6 @@ def substring_dup_spans(df: DataFrame, text_col: str = "text",
 
 # ------------------------------------------------- incremental dedup -----
 
-def band_keys(signatures: DataFrame, bands: int = DEFAULT_BANDS,
-              num_hashes: int = DEFAULT_NUM_HASHES) -> DataFrame:
-    """-> (doc_id, band, h): the banded LSH bucket keys — the PERSISTED
-    STATE of incremental dedup, and the banding stage
-    ``lsh_candidate_pairs`` builds on. At corpus scale this table is
-    written once (k/bands hashes folded per band, 3 longs per row),
-    partitioned/bucketed by (band, h); a daily delta probes it with an
-    equi-join that shuffles only the delta."""
-    rows = num_hashes // bands
-    # element_at past the array end yields NULL (non-ANSI) which would
-    # silently collapse a band into one constant bucket — fail loudly if
-    # the caller's num_hashes disagrees with the signature stage's
-    len_ok = F.assert_true(
-        F.size("sig") == num_hashes,
-        F.concat(F.lit("band_keys: size(sig) != num_hashes="),
-                 F.lit(str(num_hashes)), F.lit(" for doc "), F.col("doc_id")))
-
-    def _band_hash(b: int):
-        h = F.xxhash64(*[F.element_at("sig", b * rows + r + 1)
-                         for r in range(rows)])
-        # fold the assertion into band 0 so column pruning can't drop it
-        return F.when(len_ok.isNull(), h) if b == 0 else h
-
-    cols = [F.struct(F.lit(b).alias("band"), _band_hash(b).alias("h"))
-            for b in range(bands)]
-    return (signatures
-            .select("doc_id", F.explode(F.array(*cols)).alias("bk"))
-            .select("doc_id", "bk.band", "bk.h"))
-
-
 def minhash_incremental_pairs(corpus_docs: DataFrame, new_docs: DataFrame,
                               text_col: str = "text",
                               threshold: float = 0.8,
@@ -718,9 +696,7 @@ def minhash_incremental_pairs(corpus_docs: DataFrame, new_docs: DataFrame,
     re-shingled for the exact-Jaccard verify (semi-join prefilter,
     exactly like ``minhash_dup_pairs``). New-vs-new pairs inside the
     batch are included (the batch must also dedup against itself)."""
-    corpus_keys = band_keys(
-        minhash_signatures(shingle_array(corpus_docs, text_col), num_hashes),
-        bands, num_hashes)
+    corpus_keys = minhash_band_keys(corpus_docs, text_col, num_hashes, bands)
     return minhash_incremental_pairs_from_state(
         corpus_keys, corpus_docs.select("doc_id", text_col), new_docs,
         text_col, threshold, num_hashes, bands)
@@ -745,25 +721,19 @@ def minhash_incremental_pairs_from_state(corpus_keys: DataFrame,
     Long-lived callers (the streaming wrapper) wrap each batch in
     ``cache_scope()`` so the internal candidate cache is unpersisted
     after the batch's action; batch sessions can skip the scope."""
-    new_keys = band_keys(
-        minhash_signatures(shingle_array(new_docs, text_col), num_hashes),
-        bands, num_hashes)
+    new_keys = minhash_band_keys(new_docs, text_col, num_hashes, bands)
     all_keys = corpus_keys.unionByName(new_keys)
-    cand = (new_keys.alias("x").join(all_keys.alias("y"), ["band", "h"])
-            .where(F.col("x.doc_id") != F.col("y.doc_id"))
-            .select(F.least("x.doc_id", "y.doc_id").alias("a"),
-                    F.greatest("x.doc_id", "y.doc_id").alias("b"))
+    cand = (bucket_pairs(new_keys, all_keys)
+            .where(F.col("a") != F.col("b"))
+            .select(F.least("a", "b").alias("a"),
+                    F.greatest("a", "b").alias("b"))
             .distinct())
     cand = _track_cache(cand)
-    cand_ids = (cand.select(F.col("a").alias("doc_id"))
-                .unionByName(cand.select(F.col("b").alias("doc_id")))
-                .distinct())
     texts = (corpus_texts.select("doc_id", text_col)
              .unionByName(new_docs.select("doc_id", text_col))
              .dropDuplicates(["doc_id"]))
-    sh_cand = shingle_array(texts.join(cand_ids, "doc_id", "left_semi"),
-                            text_col)
-    return verify_jaccard(cand, sh_cand, threshold)
+    sh_cand = candidate_shingles(texts, cand, ("a", "b"), text_col)
+    return verify_jaccard(cand, sh_cand, sh_cand, threshold)
 
 
 def cross_corpus_pairs(a_docs: DataFrame, b_docs: DataFrame,
@@ -777,32 +747,14 @@ def cross_corpus_pairs(a_docs: DataFrame, b_docs: DataFrame,
     keys; AQE broadcasts the small side, so the big corpus never
     shuffles on anything but its own map-side key emission. Verify
     re-shingles candidate docs only, as everywhere else."""
-    a_keys = band_keys(
-        minhash_signatures(shingle_array(a_docs, text_col), num_hashes),
-        bands, num_hashes).withColumnRenamed("doc_id", "a_id")
-    b_keys = band_keys(
-        minhash_signatures(shingle_array(b_docs, text_col), num_hashes),
-        bands, num_hashes).withColumnRenamed("doc_id", "b_id")
-    cand = (a_keys.join(b_keys, ["band", "h"])
-            .select("a_id", "b_id").distinct())
-    cand = _track_cache(cand)
-    sh_a = shingle_array(
-        a_docs.join(cand.select(F.col("a_id").alias("doc_id")).distinct(),
-                    "doc_id", "left_semi"), text_col) \
-        .select(F.col("doc_id").alias("a_id"), F.col("shingles").alias("_sa"))
-    sh_b = shingle_array(
-        b_docs.join(cand.select(F.col("b_id").alias("doc_id")).distinct(),
-                    "doc_id", "left_semi"), text_col) \
-        .select(F.col("doc_id").alias("b_id"), F.col("shingles").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    union = (F.size("_sa") + F.size("_sb")
-             - F.size(F.array_intersect("_sa", "_sb"))).cast("double")
-    out = (cand.join(sh_a, "a_id").join(sh_b, "b_id")
-           .select("a_id", "b_id",
-                   F.when(union > 0, inter / union).otherwise(0.0)
-                   .alias("jaccard"))
-           .where(F.col("jaccard") >= threshold))
-    return out
+    a_keys = minhash_band_keys(a_docs, text_col, num_hashes, bands)
+    b_keys = minhash_band_keys(b_docs, text_col, num_hashes, bands)
+    cand = _track_cache(bucket_pairs(a_keys, b_keys))
+    sh_a = candidate_shingles(a_docs, cand, ("a",), text_col)
+    sh_b = candidate_shingles(b_docs, cand, ("b",), text_col)
+    return (verify_jaccard(cand, sh_a, sh_b, threshold)
+            .select(F.col("a").alias("a_id"), F.col("b").alias("b_id"),
+                    "jaccard"))
 
 
 def decontaminate(train_docs: DataFrame, test_docs: DataFrame,

@@ -2,6 +2,10 @@
 self-retrieval invariant (the reference's key test,
 NobleCoderTerminologyTest.java:31-84), TermFilter rules, loaders."""
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from nobletools_spark.config import SearchConfig
@@ -530,3 +534,42 @@ class TestRrfExport:
         orf_keys = {(r.CUI, r.LUI, r.SUI) for r in orf["MRCON"].collect()}
         assert rrf_keys == orf_keys
         assert {r.TTY for r in orf["MRSO"].collect()} <= {"PT", "NP"}
+
+
+# ---------------------------------------------------- UDF lifecycle -------
+
+class TestUdfLifecycle:
+    """pandas UDFs are built per call, never at module level: a module-level
+    UDF needs a session at import and keeps the first SparkContext's
+    accumulator. Both checks run in a fresh interpreter (no session)."""
+
+    REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def run(self, code: str):
+        env = dict(os.environ, PYTHONPATH=self.REPO)
+        return subprocess.run([sys.executable, "-c", code], cwd=self.REPO,
+                              env=env, capture_output=True, text=True,
+                              timeout=600)
+
+    def test_import_needs_no_session(self):
+        r = self.run("import nobletools_spark.terminology.rrf_export\n"
+                     "import nobletools_spark.terminology.build")
+        assert r.returncode == 0, r.stderr[-2000:]
+
+    def test_build_after_session_restart(self):
+        r = self.run(
+            "from pyspark.sql import SparkSession\n"
+            "from nobletools_spark.terminology.build import "
+            "build_terminology\n"
+            "from nobletools_spark.terminology.fixture import "
+            "FIXTURE_CONCEPTS\n"
+            "for _ in range(2):\n"
+            "    spark = (SparkSession.builder.master('local[1]')\n"
+            "             .config('spark.ui.enabled', 'false')\n"
+            "             .config('spark.sql.shuffle.partitions', '1')\n"
+            "             .getOrCreate())\n"
+            "    t = build_terminology(spark, FIXTURE_CONCEPTS, compact=True)\n"
+            "    assert t['word_index'].count() > 0\n"
+            "    spark.stop()\n")
+        assert r.returncode == 0, r.stderr[-2000:]
+        assert "Failed to update accumulator" not in r.stderr

@@ -94,10 +94,6 @@ class TestMinHash:
         assert over and over[0].n_docs == n  # visible to the caller
         # and the capped pair emitter excludes exactly that component
         assert D.component_pairs(comp, max_component=10).count() == 0
-        rep = D.minhash_dup_report(df, max_component=10)
-        assert rep["oversize_components_excluded"] == 1
-        assert rep["oversize_docs_excluded"] == n
-        assert rep["verified_pairs"] == 0
 
     def test_dup_groups_match_pairwise_closure(self, spark, docs):
         pairs = D.minhash_dup_pairs(docs, threshold=0.8).collect()
@@ -198,7 +194,8 @@ class TestEmbeddingNearDup:
         brute = {(r.a, r.b) for r in
                  D.embedding_neardup_pairs(emb, threshold=0.4).collect()}
         lsh = {(r.a, r.b) for r in
-               D.embedding_lsh_neardup_pairs(emb, threshold=0.4).collect()}
+               D.embedding_lsh_neardup_pairs(emb, threshold=0.4,
+                                             dim=64).collect()}
         assert lsh <= brute
         assert brute  # pairs exist at this threshold
 
@@ -207,7 +204,8 @@ class TestEmbeddingNearDup:
         dup = emb.withColumn("vec_id", F.col("vec_id") + 100000)
         both = emb.unionByName(dup)
         lsh = {(r.a, r.b): r.cosine for r in
-               D.embedding_lsh_neardup_pairs(both, threshold=0.99).collect()}
+               D.embedding_lsh_neardup_pairs(both, threshold=0.99,
+                                             dim=64).collect()}
         assert len(lsh) >= 50  # every vector pairs with its clone
         assert all(c >= 0.99 for c in lsh.values())
 
@@ -228,6 +226,41 @@ class TestEmbeddingNearDup:
                    sqrt(list_dot_product(b.v,b.v))) >= 0.4""").fetchall())
         assert [(a, b, float(c)) for a, b, c in got] == \
             [(a, b, float(c)) for a, b, c in want]
+
+
+def _halves(d):
+    # the null-id row goes to BOTH sides of the two-input families
+    null = F.col("doc_id").isNull()
+    return (d.where(null | (F.col("doc_id") <= 2)),
+            d.where(null | (F.col("doc_id") > 2)))
+
+
+BANDED_FAMILIES = {
+    "simhash": D.simhash_neardup_pairs,
+    "embedding_lsh": lambda d: D.embedding_lsh_neardup_pairs(
+        d.select(F.col("doc_id").alias("vec_id"),
+                 F.array_repeat(F.lit(1.0), 64).alias("embedding")),
+        threshold=0.9, dim=64),
+    "incremental": lambda d: D.minhash_incremental_pairs(
+        *_halves(d), threshold=0.5),
+    "cross_corpus": lambda d: D.cross_corpus_pairs(*_halves(d),
+                                                   threshold=0.5),
+    "minhash": lambda d: D.minhash_dup_pairs(d, threshold=0.5),
+}
+
+
+@pytest.mark.parametrize("family", sorted(BANDED_FAMILIES))
+def test_banded_pairs_distinct_and_never_null(spark, family):
+    # identical documents collide in every band, so every pair is found
+    # once per band before the dedup; a null id must never pair (a struct
+    # id around a null still compares, nulls first)
+    text = "the very same words in every document so all bands collide"
+    d = spark.createDataFrame([(1, text), (2, text), (3, text),
+                               (None, text)], "doc_id long, text string")
+    pairs = [(r[0], r[1]) for r in BANDED_FAMILIES[family](d).collect()]
+    assert pairs
+    assert len(pairs) == len(set(pairs))
+    assert not any(None in p for p in pairs)
 
 
 class TestAnalysis:
