@@ -2,15 +2,16 @@
 
 Stage architecture (SURVEY.md §7): each stage is a pure DataFrame ->
 DataFrame transform; the heavy lexical work runs inside Arrow-batched
-``mapInPandas`` over a broadcast dictionary (the Spark analog of the
-reference's single-JVM loop over JDBM hashtables — every sentence is
-independent, so the per-sentence matcher parallelizes embarrassingly
-across executors; the only shuffles in the whole pipeline are the
-document-level context pass (groupBy doc_id) and the final triple dedupe).
+``mapInPandas`` over a broadcast dictionary (every sentence is
+independent, so the matcher parallelizes embarrassingly). Shapes:
+``split_sentences`` documents -> sentences and ``detect_mentions``
+sentences -> mentions are narrow; ``annotate_documents`` shuffles once on
+doc_id for document state; the triple path fuses split + match into
+``document_concepts`` (documents -> distinct ``(doc_id, cui)``), so its
+only shuffle is the triple dedupe in ``materialize_triples``.
 
 Scale posture:
 - dictionaries travel once per executor via ``SparkContext.broadcast``;
-- sentence-split and mention-detect are narrow (no shuffle);
 - the hot-word skew the reference fights with its blacklist
   (BlacklistHandler.java) is defused the same way here (pre-pruned posting
   lists) plus optional salted repartition (``salt_documents``) so hot
@@ -82,6 +83,41 @@ def salt_documents(documents: DataFrame, salt_buckets: int = 0) -> DataFrame:
     return documents.repartition(salt_buckets)
 
 
+def doc_sentences(spans, doc_type: str = SP.TYPE_MEDICAL_REPORT,
+                  filter_headers: bool = True) -> Iterator[tuple]:
+    """C1-C6 for one document: yields ``(sent_id, sent_type, text, offset,
+    paragraph_id)`` for each kept sentence of its ``kind='text'`` spans,
+    offsets document-absolute. The one splitter loop of every stage."""
+    sent_id = para_base = 0
+    for span in spans:  # Arrow struct dicts or Rows, both key by name
+        stext = span["text"]
+        if span["kind"] != "text" or not stext:
+            continue
+        rows, secs = SP.process_document(stext, doc_type)
+        paras = SP.find_paragraphs(stext, secs)
+
+        def pid_for(off: int) -> int:
+            for j, p in enumerate(paras):
+                if p.start <= off < max(p.end, p.start + 1):
+                    return para_base + j
+            return -1
+
+        for r in rows:
+            # clip the phantom trailing pad the line-splitter appends past
+            # the end of the span (parity artifact of re-appending '\n' to
+            # the final split line)
+            over = (r.offset + len(r.text)) - len(stext)
+            if over > 0:
+                r.text = r.text[:-over]
+            if SP.filter_sentence(r.text, r.sent_type,
+                                  filter_header=filter_headers):
+                continue
+            yield (sent_id, r.sent_type, r.text,
+                   int(span["offset"]) + r.offset, pid_for(r.offset))
+            sent_id += 1
+        para_base += len(paras)
+
+
 def split_sentences(documents: DataFrame, doc_type: str = SP.TYPE_MEDICAL_REPORT,
                     filter_headers: bool = True) -> DataFrame:
     """P1: explode ``kind='text'`` spans into typed sentences with
@@ -89,66 +125,37 @@ def split_sentences(documents: DataFrame, doc_type: str = SP.TYPE_MEDICAL_REPORT
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: dict[str, list] = {k: [] for k in
-                                    ("doc_id", "sent_id", "sent_type", "text",
-                                     "offset", "paragraph_id")}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                sent_id = 0
-                para_base = 0
-                for span in spans:
-                    kind = span["kind"] if isinstance(span, dict) else span.kind
-                    if kind != "text":
-                        continue
-                    stext = span["text"] if isinstance(span, dict) else span.text
-                    soff = span["offset"] if isinstance(span, dict) else span.offset
-                    if not stext:
-                        continue
-                    rows, secs = SP.process_document(stext, doc_type)
-                    paras = SP.find_paragraphs(stext, secs)
-
-                    def pid_for(off: int) -> int:
-                        for j, p in enumerate(paras):
-                            if p.start <= off < max(p.end, p.start + 1):
-                                return para_base + j
-                        return -1
-
-                    for r in rows:
-                        # clip the phantom trailing pad the line-splitter
-                        # appends past the end of the span (parity artifact
-                        # of re-appending '\n' to the final split line)
-                        over = (r.offset + len(r.text)) - len(stext)
-                        if over > 0:
-                            r.text = r.text[:-over]
-                        if SP.filter_sentence(r.text, r.sent_type,
-                                              filter_header=filter_headers):
-                            continue
-                        out["doc_id"].append(doc_id)
-                        out["sent_id"].append(sent_id)
-                        out["sent_type"].append(r.sent_type)
-                        out["text"].append(r.text)
-                        out["offset"].append(int(soff) + r.offset)
-                        out["paragraph_id"].append(pid_for(r.offset))
-                        sent_id += 1
-                    para_base += len(paras)
-            if out["doc_id"]:  # empty frames infer float64 cols, breaking Arrow
-                yield pd.DataFrame(out)
+            rows = [(doc_id, *s)
+                    for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
+                    for s in doc_sentences(spans, doc_type, filter_headers)]
+            if rows:  # empty frames infer float64 cols, breaking Arrow
+                yield pd.DataFrame.from_records(
+                    rows, columns=SENTENCES_SCHEMA.names)
 
     return documents.mapInPandas(gen, schema=SENTENCES_SCHEMA)
+
+
+def match_text(text: str, dico: Dictionary, cfg: SearchConfig,
+               acronyms=None) -> tuple[str, list]:
+    """The matcher call of every match path: blank DeID tags (same-length,
+    offsets kept), run the matcher, then the document's acronym pass when
+    ``acronyms`` is given. Returns the scrubbed text and the mentions."""
+    stext = SP.filter_deid_tags(text)
+    mentions = process_sentence(stext, dico, cfg)
+    if acronyms is not None:
+        mentions = acronyms.process(stext, mentions)
+    return stext, mentions
 
 
 def match_sentence(cols: dict[str, list], doc_id: str, sent_id: int,
                    text: str, offset: int, dico: Dictionary,
                    cfg: SearchConfig, acronyms=None) -> tuple[str, list]:
-    """P2 for one sentence, the mention-row builder every match path
-    shares: blank DeID tags (same-length, offsets kept), run the matcher
-    (then the document's acronym pass when ``acronyms`` is given) and
-    append one row per mention to ``cols``, the MENTIONS_SCHEMA column
-    lists. Annotation offsets are rebased to document-absolute
-    (Mention.java:75-81). Returns the scrubbed text and the mentions."""
-    stext = SP.filter_deid_tags(text)
-    mentions = process_sentence(stext, dico, cfg)
-    if acronyms is not None:
-        mentions = acronyms.process(stext, mentions)
+    """P2 for one sentence, the mention-row builder every mention path
+    shares: ``match_text``, then one row per mention appended to ``cols``,
+    the MENTIONS_SCHEMA column lists. Annotation offsets are rebased to
+    document-absolute (Mention.java:75-81). Returns the scrubbed text and
+    the mentions."""
+    stext, mentions = match_text(text, dico, cfg, acronyms)
     offset, sent_id = int(offset), int(sent_id)
     (c_doc, c_sent, c_cui, c_name, c_matched, c_norm, c_score, c_anns,
      c_start, c_end, c_sem, c_src) = cols.values()
@@ -194,6 +201,29 @@ def detect_mentions(sentences: DataFrame, dico_bc,
                 yield pd.DataFrame(out)
 
     return sentences.mapInPandas(gen, schema=MENTIONS_SCHEMA)
+
+
+def document_concepts(documents: DataFrame, dico_bc,
+                      cfg: SearchConfig | None = None) -> DataFrame:
+    """P1+P2 fused for the triple path: one mapInPandas over documents
+    yields each document's distinct CUIs as ``(doc_id, cui)``. Catalyst
+    cannot prune columns inside a Python UDF, so the projection is pushed
+    in here: no sentence or mention row is built or crosses Arrow. A doc_id
+    on two input rows repeats its pairs; ``mention_triples`` dedupes."""
+    cfg = cfg or for_search_method(None)
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        dico: Dictionary = dico_bc.value if hasattr(dico_bc, "value") else dico_bc
+        for pdf in batches:
+            rows = [(doc_id, cui)
+                    for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
+                    for cui in dict.fromkeys(
+                        m.cui for _, _, text, _, _ in doc_sentences(spans)
+                        for m in match_text(text, dico, cfg)[1])]
+            if rows:  # empty frames infer float64 cols, breaking Arrow
+                yield pd.DataFrame.from_records(rows, columns=["doc_id", "cui"])
+
+    return documents.mapInPandas(gen, schema="doc_id string, cui string")
 
 
 ANNOTATED_SCHEMA = ST.StructType(
@@ -354,6 +384,17 @@ def match_stage(sentences: DataFrame, dico_bc, context_bc=None,
     return detect_mentions(sentences, dico_bc, cfg)
 
 
+def concept_stage(documents: DataFrame, dico_bc, context_bc=None,
+                  cfg: SearchConfig | None = None) -> DataFrame:
+    """The ``(doc_id, cui)`` rows doc->CUI triples are built from: with a
+    modifier terminology the annotated mentions (its acronym pass adds
+    mentions), otherwise the fused ``document_concepts``."""
+    if context_bc is not None:
+        return annotate_documents(split_sentences(documents), dico_bc,
+                                  context_bc, cfg)
+    return document_concepts(documents, dico_bc, cfg)
+
+
 def dedup_redundant_mentions(mentions: DataFrame) -> DataFrame:
     """F6: same concept + contained span -> keep widest
     (DomainOntology.removeRedundantMentions:645-670). Window over
@@ -415,15 +456,19 @@ def run_pipeline(spark: SparkSession, documents: DataFrame, dico: Dictionary,
                  method: str | None = None, salt_buckets: int = 0,
                  context_dico: Dictionary | None = None,
                  ) -> dict[str, DataFrame]:
-    """End-to-end P0->P6, with the match stage ``match_stage`` picks.
-    Returns all frames."""
+    """End-to-end P0->P6. Returns all frames, lazy; ``triples`` come from
+    ``concept_stage``, not from the returned ``mentions``. A caller that
+    needs both should cache ``mentions`` and call ``materialize_triples``
+    on it, or the matcher runs twice."""
     cfg = for_search_method(method)
     sc = spark.sparkContext
     docs = salt_documents(documents, salt_buckets)
     sentences = split_sentences(docs)
+    dico_bc = sc.broadcast(dico)
     context_bc = (sc.broadcast(context_dico) if context_dico is not None
                   else None)
-    mentions = match_stage(sentences, sc.broadcast(dico), context_bc, cfg)
-    triples = materialize_triples(mentions, spark, dico)
+    mentions = match_stage(sentences, dico_bc, context_bc, cfg)
+    triples = materialize_triples(
+        concept_stage(docs, dico_bc, context_bc, cfg), spark, dico)
     return {"documents": docs, "sentences": sentences,
             "mentions": mentions, "triples": triples}

@@ -62,9 +62,9 @@ def triple_stream_writer(docs_stream: DataFrame, dico_bc, dico,
     """documents stream -> triples appended to a snapshot-committed graph
     table with EXACTLY-ONCE visibility per micro-batch.
 
-    Each batch runs the same detect/annotate stages as the batch pipeline,
-    materializes its mention triples (``include_isa=False`` — the static
-    CUI->isa->CUI edges are committed once up front under the ``isa-base``
+    Each batch runs the batch pipeline's ``concept_stage``, materializes
+    its mention triples (``include_isa=False`` — the static CUI->isa->CUI
+    edges are committed once up front under the ``isa-base``
     fingerprint, not re-appended per batch), and lands through
     ``SnapshotTable.append_once`` keyed on (query identity, batch_id) —
     the (queryId, batchId) key of the Iceberg/SS exactly-once pattern. A
@@ -84,7 +84,8 @@ def triple_stream_writer(docs_stream: DataFrame, dico_bc, dico,
     import hashlib
     import uuid
 
-    from ..pipeline.stages import isa_triples, materialize_triples
+    from ..pipeline.stages import (concept_stage, isa_triples,
+                                   materialize_triples)
     from ..pipeline.tables import SnapshotTable
 
     cfg = for_search_method(method)
@@ -96,10 +97,9 @@ def triple_stream_writer(docs_stream: DataFrame, dico_bc, dico,
                  if checkpoint_dir else uuid.uuid4().hex[:12])
 
     def run_batch(batch_df: DataFrame, batch_id: int):
-        mentions = match_stage(split_sentences(batch_df), dico_bc,
-                               context_bc, cfg)
-        triples = materialize_triples(mentions, batch_df.sparkSession, dico,
-                                      include_isa=False)
+        triples = materialize_triples(
+            concept_stage(batch_df, dico_bc, context_bc, cfg),
+            batch_df.sparkSession, dico, include_isa=False)
         SnapshotTable(batch_df.sparkSession, table_root).append_once(
             triples, f"{query_key}-batch-{batch_id}")
 

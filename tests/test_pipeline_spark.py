@@ -101,6 +101,47 @@ class TestPipeline:
         assert got == expected
 
 
+class TestFusedTriplePath:
+    @pytest.mark.parametrize("salt", [0, 3])
+    def test_triples_equal_mention_derived(self, spark, corpus, salt):
+        """run_pipeline's triples come from the fused document_concepts
+        stage; they must equal the triples of the mention rows, edge
+        documents included."""
+        from nobletools_spark.config import for_search_method
+        from nobletools_spark.pipeline.documents import DOCUMENTS_SCHEMA
+        from nobletools_spark.pipeline.stages import (detect_mentions,
+                                                      materialize_triples,
+                                                      split_sentences)
+
+        def span(text, kind="text"):
+            return {"kind": kind, "text": text, "offset": 0,
+                    "media_ref": "" if kind == "text" else "media://m/0"}
+
+        edge = spark.createDataFrame([
+            ("deid", [span("Seen by **NAME[nevus] for follow up of melanoma.")]),
+            ("media", [span("", "image")]),
+            ("empty", [span(""), span("Patient has fever.")]),
+            ("none", [span("The weather was pleasant today.")]),
+            ("dup", [span("Patient has a rash.")]),
+            ("dup", [span("The rash has spread.")]),
+        ], schema=DOCUMENTS_SCHEMA)
+        docs = corpus.unionByName(edge)
+        dico = fixture_dictionary()
+        got = [tuple(r) for r in run_pipeline(
+            spark, docs, dico, "best-match", salt_buckets=salt)
+            ["triples"].collect()]
+        want = materialize_triples(detect_mentions(
+            split_sentences(docs), spark.sparkContext.broadcast(dico),
+            for_search_method("best-match")), spark, dico)
+        assert len(got) == len(set(got))  # "dup" spans two rows
+        assert set(got) == {tuple(r) for r in want.collect()}
+        mc = {(s, o) for s, p, o, _ in got if p == "mentions_concept"}
+        assert {("deid", "C0025202"), ("empty", "C0015967"),
+                ("dup", "C0015230")} <= mc
+        assert ("deid", "C0027960") not in mc  # nevus sits in a DeID tag
+        assert not {s for s, _ in mc} & {"media", "none"}
+
+
 class TestParagraphScope:
     def test_paragraph_action_scopes_across_sentences(self, spark):
         from nobletools_spark.config import for_search_method

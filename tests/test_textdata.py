@@ -419,7 +419,11 @@ class TestMultimodal:
 class TestIvfAnn:
     @pytest.fixture(scope="class")
     def emb(self, spark):
-        return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+        # unpersisted on teardown: a cached scan left behind changes the
+        # plans of later tests that read the same file
+        emb = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+        yield emb
+        emb.unpersist()
 
     @pytest.fixture(scope="class")
     def probe(self, emb):
