@@ -10,9 +10,10 @@ Behavior-matched to ``tools/AcronymDetector.java``:
   to the recorded CUI, removing conflicting mentions (:216-249)
 - state cleared per document (NobleCoder.process:273)
 
-The document-scoped mutable state is exactly why the pipeline runs this
-inside a groupBy(doc_id) applyInPandas pass — sentences of one document are
-processed in order in one task; documents parallelize freely.
+The state is document-scoped, so each pass that runs it sees a document's
+sentences in order in one Python stream: ``annotate_documents`` after its
+doc_id shuffle and sort, ``document_concepts`` per document row (no
+shuffle). Documents parallelize freely.
 """
 
 from __future__ import annotations

@@ -20,7 +20,7 @@ Behavior-matched to ``tools/ConText.java``:
   otherwise nearest to the target wins (ties keep the incumbent)
 
 Pure Python over broadcast dictionaries; executed inside the document-level
-``applyInPandas`` pass (pipeline.stages.annotate_documents).
+``mapInPandas`` pass (pipeline.stages.annotate_documents).
 """
 
 from __future__ import annotations

@@ -133,16 +133,6 @@ def _shadow_cond(n, parent_of: dict[str, str]):
     return c
 
 
-def _satisfies(required, mods: dict) -> bool:
-    for mtype, allowed in required:
-        val = mods.get(mtype)
-        if val is None:
-            return False
-        if allowed and val not in allowed:
-            return False
-    return True
-
-
 def compose(annotated: DataFrame, schema: DomainSchema,
             dico: Dictionary) -> dict[str, DataFrame]:
     """annotated mentions (with ``modifiers`` map) -> instances + triples."""

@@ -21,7 +21,10 @@ Iceberg table + snapshot).
 
 Lineage counters double as the per-partition metrics the north rule asks
 for: they record how many rows each partition produced, which makes skew
-visible (max/median partition ratio) without a Spark UI.
+visible (``StageResult.skew``, max/median partition ratio) without a Spark
+UI. They come from the written files themselves — each task's parquet
+footer holds its row count — so the stage output is written as is and
+never read back to be counted.
 """
 
 from __future__ import annotations
@@ -32,8 +35,10 @@ import os
 from dataclasses import dataclass, field
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .tables import require_local_path
 
 
 def fingerprint(*parts: str) -> str:
@@ -44,6 +49,22 @@ def fingerprint(*parts: str) -> str:
     return h.hexdigest()[:16]
 
 
+def _footer_lineage(data_path: str) -> list[dict]:
+    """Rows per output partition, read from the parquet footers of a
+    committed write: Spark names each task's files
+    ``part-<partition>-<uuid>-c<file>``. Zero-row files (the schema file
+    of an empty write) do not count as partitions."""
+    counts: dict[int, int] = {}
+    for name in os.listdir(data_path):
+        if name.startswith("part-") and name.endswith(".parquet"):
+            n = pq.read_metadata(os.path.join(data_path, name)).num_rows
+            if n:
+                pid = int(name.split("-")[1])
+                counts[pid] = counts.get(pid, 0) + n
+    return [{"partition_id": p, "rows_out": n}
+            for p, n in sorted(counts.items())]
+
+
 @dataclass
 class StageResult:
     name: str
@@ -52,12 +73,28 @@ class StageResult:
     rows: int
     lineage: list[dict]  # [{partition_id, rows_out}]
 
+    def skew(self) -> dict:
+        """Max/median partition-row ratio from the lineage counters — the
+        operator-facing signal for turning up salt buckets."""
+        counts = sorted(x["rows_out"] for x in self.lineage) or [0]
+        med = counts[len(counts) // 2]
+        return {"stage": self.name, "partitions": len(counts),
+                "max_rows": counts[-1], "median_rows": med,
+                "skew_ratio": (counts[-1] / med) if med else None}
+
 
 @dataclass
 class CheckpointManager:
     spark: SparkSession
     root: str
     results: dict[str, StageResult] = field(default_factory=dict)
+
+    def __post_init__(self) -> None:
+        require_local_path(
+            "CheckpointManager", self.root,
+            "manifests are committed with os.replace and lineage is read "
+            "from the written parquet footers, both on the driver's "
+            "filesystem")
 
     def _paths(self, stage: str) -> tuple[str, str]:
         d = os.path.join(self.root, stage)
@@ -80,8 +117,7 @@ class CheckpointManager:
         data_path, mpath = self._paths(stage)
         manifest = self._load_manifest(stage)
         if manifest is not None and manifest.get("fingerprint") == fp:
-            # drop the internal lineage column here too — resumed and fresh
-            # stages must expose the identical schema
+            # checkpoints written by older versions carry a _pid column
             df = self.spark.read.parquet(data_path).drop("_pid")
             res = StageResult(stage, df, resumed=True,
                               rows=manifest["rows"],
@@ -90,17 +126,8 @@ class CheckpointManager:
             return res
 
         df = compute()
-        # lineage: rows produced per output partition, captured in the same
-        # pass that writes the data (spark_partition_id of the write plan)
-        with_pid = df.withColumn("_pid", F.spark_partition_id())
-        with_pid.write.mode("overwrite").parquet(data_path)
-        written = self.spark.read.parquet(data_path)
-        lineage_rows = (written.groupBy("_pid")
-                        .agg(F.count(F.lit(1)).alias("rows_out"))
-                        .collect())
-        lineage = sorted(
-            ({"partition_id": int(r._pid), "rows_out": int(r.rows_out)}
-             for r in lineage_rows), key=lambda x: x["partition_id"])
+        df.write.mode("overwrite").parquet(data_path)
+        lineage = _footer_lineage(data_path)
         rows = sum(x["rows_out"] for x in lineage)
 
         manifest = {"stage": stage, "fingerprint": fp, "rows": rows,
@@ -112,20 +139,10 @@ class CheckpointManager:
             json.dump(manifest, f)
         os.replace(tmp, mpath)  # atomic: manifest appears only when complete
 
-        out = self.spark.read.parquet(data_path).drop("_pid")
-        res = StageResult(stage, out, resumed=False, rows=rows,
-                          lineage=lineage)
+        res = StageResult(stage, self.spark.read.parquet(data_path),
+                          resumed=False, rows=rows, lineage=lineage)
         self.results[stage] = res
         return res
-
-    def skew_report(self, stage: str) -> dict:
-        """Max/median partition-row ratio from the lineage counters."""
-        lin = self.results[stage].lineage
-        counts = sorted(x["rows_out"] for x in lin) or [0]
-        med = counts[len(counts) // 2]
-        return {"stage": stage, "partitions": len(counts),
-                "max_rows": counts[-1], "median_rows": med,
-                "skew_ratio": (counts[-1] / med) if med else None}
 
 
 def run_checkpointed_pipeline(spark: SparkSession, documents: DataFrame,

@@ -143,17 +143,3 @@ def interleave_flat_documents(df: DataFrame) -> DataFrame:
         doc_id_s.alias("doc_id"),
         F.when(mid > 0, two_spans).otherwise(one_span).alias("spans"))
 
-
-def span_fingerprint(spans) -> str:
-    """Per-row span-sequence identity (kind, text, media_ref, order) — the
-    input_hint invariant checked at every stage boundary."""
-    import hashlib
-    h = hashlib.sha256()
-    for s in spans:
-        kind = s["kind"] if isinstance(s, dict) else s.kind
-        text = s["text"] if isinstance(s, dict) else s.text
-        ref = s["media_ref"] if isinstance(s, dict) else s.media_ref
-        h.update(kind.encode()); h.update(b"\x00")
-        h.update(text.encode()); h.update(b"\x00")
-        h.update(ref.encode()); h.update(b"\x01")
-    return h.hexdigest()

@@ -101,13 +101,6 @@ def write_ntriples(triples: DataFrame, path: str,
     out.write.mode("overwrite").text(path)
 
 
-def write_eval_report(report: DataFrame, path: str) -> None:
-    """B5: the per-concept confusion report as a TSV
-    (eval/AnnotationEvaluation.java:91-105 analog)."""
-    (report.coalesce(1).write.mode("overwrite")
-     .option("sep", "\t").option("header", "true").csv(path))
-
-
 def eval_report_html(report: DataFrame, title: str = "Analysis") -> str:
     """B5 HTML flavor: the confusion-matrix table rendered exactly like
     the reference's ``analysis.html`` (``Analysis.getResultTableAsHTML:

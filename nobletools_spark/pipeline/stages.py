@@ -6,7 +6,8 @@ DataFrame transform; the heavy lexical work runs inside Arrow-batched
 independent, so the matcher parallelizes embarrassingly). Shapes:
 ``split_sentences`` documents -> sentences and ``detect_mentions``
 sentences -> mentions are narrow; ``annotate_documents`` shuffles once on
-doc_id for document state; the triple path fuses split + match into
+doc_id for document state. The triple path, with or without a modifier
+terminology, fuses split + match (+ the acronym pass) into
 ``document_concepts`` (documents -> distinct ``(doc_id, cui)``), so its
 only shuffle is the triple dedupe in ``materialize_triples``.
 
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
 from ..config import SearchConfig, for_search_method
+from ..context.acronyms import AcronymState
 from ..matcher.core import process_sentence
 from ..sentence import splitter as SP
 from ..terminology.storage import Dictionary
@@ -204,22 +206,30 @@ def detect_mentions(sentences: DataFrame, dico_bc,
 
 
 def document_concepts(documents: DataFrame, dico_bc,
-                      cfg: SearchConfig | None = None) -> DataFrame:
+                      cfg: SearchConfig | None = None,
+                      acronyms: bool = False) -> DataFrame:
     """P1+P2 fused for the triple path: one mapInPandas over documents
     yields each document's distinct CUIs as ``(doc_id, cui)``. Catalyst
     cannot prune columns inside a Python UDF, so the projection is pushed
-    in here: no sentence or mention row is built or crosses Arrow. A doc_id
-    on two input rows repeats its pairs; ``mention_triples`` dedupes."""
+    in here: no sentence or mention row is built or crosses Arrow. With
+    ``acronyms`` each document row gets one ``AcronymState``, the acronym
+    pass of ``annotate_documents``; a doc_id on two input rows is two
+    acronym scopes, and its pairs repeat (``mention_triples`` dedupes)."""
     cfg = cfg or for_search_method(None)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         dico: Dictionary = dico_bc.value if hasattr(dico_bc, "value") else dico_bc
+
+        def cuis(spans):
+            state = AcronymState(dico) if acronyms else None
+            return dict.fromkeys(
+                m.cui for _, _, text, _, _ in doc_sentences(spans)
+                for m in match_text(text, dico, cfg, state)[1])
+
         for pdf in batches:
             rows = [(doc_id, cui)
                     for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-                    for cui in dict.fromkeys(
-                        m.cui for _, _, text, _, _ in doc_sentences(spans)
-                        for m in match_text(text, dico, cfg)[1])]
+                    for cui in cuis(spans)]
             if rows:  # empty frames infer float64 cols, breaking Arrow
                 yield pd.DataFrame.from_records(rows, columns=["doc_id", "cui"])
 
@@ -256,7 +266,6 @@ def annotate_documents(sentences: DataFrame, dico_bc, context_bc=None,
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from types import SimpleNamespace
 
-        from ..context.acronyms import AcronymState
         from ..context.context import (ConTextEngine, ModifierOut,
                                        _add_modifier)
 
@@ -386,13 +395,13 @@ def match_stage(sentences: DataFrame, dico_bc, context_bc=None,
 
 def concept_stage(documents: DataFrame, dico_bc, context_bc=None,
                   cfg: SearchConfig | None = None) -> DataFrame:
-    """The ``(doc_id, cui)`` rows doc->CUI triples are built from: with a
-    modifier terminology the annotated mentions (its acronym pass adds
-    mentions), otherwise the fused ``document_concepts``."""
-    if context_bc is not None:
-        return annotate_documents(split_sentences(documents), dico_bc,
-                                  context_bc, cfg)
-    return document_concepts(documents, dico_bc, cfg)
+    """The ``(doc_id, cui)`` rows doc->CUI triples are built from:
+    ``document_concepts``, with the acronym pass exactly when a modifier
+    terminology is given (as ``match_stage`` runs ``annotate_documents``).
+    ConText assigns modifiers but never changes a CUI, so triples need no
+    more of the annotate pass."""
+    return document_concepts(documents, dico_bc, cfg,
+                             acronyms=context_bc is not None)
 
 
 def dedup_redundant_mentions(mentions: DataFrame) -> DataFrame:

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 from dataclasses import dataclass
 
@@ -42,6 +43,16 @@ def iceberg_identifier(catalog: str, namespace: str, table: str) -> str:
         if not part or any(c in part for c in ".` \n\t"):
             raise ValueError(f"bad identifier part: {part!r}")
     return f"{catalog}.{namespace}.{table}"
+
+
+def require_local_path(owner: str, root: str, why: str) -> None:
+    """Fail fast on a scheme URI (``s3://…``) where ``owner`` keeps its
+    metadata in driver-local files: ``os.makedirs``/``open`` would put it
+    in a local directory literally named ``s3:`` while Spark wrote the data
+    to the store — neither durable nor visible to other readers."""
+    if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", root):
+        raise ValueError(f"{owner} root must be a local filesystem path, "
+                         f"got {root!r}: {why}")
 
 
 def catalog_configured(spark: SparkSession, catalog: str) -> bool:
@@ -71,20 +82,15 @@ class SnapshotTable:
         # Snapshot manifests and the _current pointer are driver-local
         # POSIX files; the atomic-commit contract rests on os.replace,
         # which no object store offers (S3 rename is copy+delete, not
-        # atomic). Accepting "s3://..." here would write the DATA to the
-        # store but the COMMIT metadata to a local directory literally
-        # named "s3:/...": commits neither durable nor visible to other
-        # readers. Fail fast instead — object-store tables go through
-        # the Iceberg catalog path (write_triples with catalog=...),
-        # whose commit protocol is designed for stores without rename.
-        import re
-        if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", self.root):
-            raise ValueError(
-                f"SnapshotTable root must be a local filesystem path, "
-                f"got {self.root!r}: the parquet fallback's atomic "
-                f"commit (os.replace) does not exist on object stores — "
-                f"configure an Iceberg catalog (spark.sql.catalog.*) "
-                f"and pass catalog= to write_triples instead")
+        # atomic). Object-store tables go through the Iceberg catalog path
+        # (write_triples with catalog=...), whose commit protocol is
+        # designed for stores without rename.
+        require_local_path(
+            "SnapshotTable", self.root,
+            "the parquet fallback's atomic commit (os.replace) does not "
+            "exist on object stores — configure an Iceberg catalog "
+            "(spark.sql.catalog.*) and pass catalog= to write_triples "
+            "instead")
 
     # -- snapshot plumbing ---------------------------------------------------
 

@@ -3,8 +3,8 @@
 The reference is strictly batch (SURVEY.md §2.J) — streaming here maps
 document micro-batches onto the SAME stage functions via ``foreachBatch``:
 sentences are independent and document state (the acronym pass) is
-confined to a groupBy(doc_id) inside one micro-batch, so no custom
-streaming state is needed. Event analytics use native watermark +
+confined to one document inside one micro-batch, so no custom streaming
+state is needed. Event analytics use native watermark +
 tumbling/sliding windows.
 
 Scale posture: a streaming KG build at 10^12-doc scale is this exact

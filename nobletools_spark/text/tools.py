@@ -68,10 +68,6 @@ def strip_diacritics(s: str) -> str:
     return s.translate(_DIACRITICS)
 
 
-def char_count(s: str, ch: str) -> int:
-    return s.count(ch)
-
-
 def get_words(query: str | None) -> list[str]:
     """Tokenize like ``TextTools.getWords``: delimiter split, then split
     embedded periods except float literals matching ``\\d*\\.\\d+``."""

@@ -7,9 +7,9 @@ Run on a cluster exactly as the north rule states::
     spark-submit --py-files nobletools_spark.zip \
         --conf spark.sql.catalog.lake=org.apache.iceberg.spark.SparkCatalog \
         scripts/submit_pipeline.py \
-        --input  s3://bucket/documents/            \
-        --checkpoint-root s3://bucket/ckpt/run1    \
-        --catalog lake                             \
+        --input  s3://bucket/documents/              \
+        --checkpoint-root /mnt/shared/ckpt/run1      \
+        --catalog lake                               \
         --method best-match --salt-buckets 8 --canonicalize
 
 On an object store the triple table MUST land through an Iceberg catalog
@@ -19,7 +19,10 @@ SnapshotTable fallback instead, whose commit is a local ``os.replace``
 pointer swap — it therefore accepts only LOCAL filesystem paths and
 fails fast on ``s3://``-style URIs (the data files would land in the
 store while the commit metadata landed on the driver's disk: neither
-durable nor visible to any other reader).
+durable nor visible to any other reader). ``--checkpoint-root`` follows
+the same rule for the same reason (stage manifests, and the parquet
+footers the lineage is read from): give it a path that the driver and
+every executor mount at the same place.
 
 The script only uses SparkSession.getOrCreate() plus the library surface,
 so it is agnostic to master/deploy-mode; locally it runs the same way
@@ -101,17 +104,9 @@ def main(argv=None) -> int:
         snapshot_id = SnapshotTable(
             spark, args.table_root).current_snapshot_id()
 
-    def skew(r):
-        # max/median partition-row ratio from the per-partition lineage —
-        # the operator-facing signal for turning up --salt-buckets
-        counts = sorted(x["rows_out"] for x in r.lineage) or [0]
-        med = counts[len(counts) // 2]
-        return {"partitions": len(counts), "max_rows": counts[-1],
-                "skew_ratio": round(counts[-1] / med, 2) if med else None}
-
     status = {
         "stages": {name: {"rows": r.rows, "resumed": r.resumed,
-                          "skew": skew(r)}
+                          "skew": r.skew()}
                    for name, r in results.items()},
         "snapshot_id": snapshot_id,
     }

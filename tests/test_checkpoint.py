@@ -1,5 +1,6 @@
 """Checkpoint/resume tests: kill-and-rerun semantics, fingerprint
-invalidation, per-partition lineage counters, skew report."""
+invalidation, per-partition lineage counters read from parquet footers,
+skew report, local-root guard."""
 
 import json
 import os
@@ -76,8 +77,87 @@ class TestStageCheckpoint:
         r = cm.run_stage("s1", "fp", lambda: spark.range(1000).repartition(7))
         assert sum(x["rows_out"] for x in r.lineage) == 1000
         assert len(r.lineage) == 7
-        rep = cm.skew_report("s1")
+        rep = r.skew()
         assert rep["partitions"] == 7 and rep["skew_ratio"] >= 1.0
+
+
+class TestFooterLineage:
+    """The manifest's per-partition lineage is read from the written
+    parquet footers; it must equal a spark_partition_id() count of the
+    same frame."""
+
+    @staticmethod
+    def pid_counts(df):
+        rows = (df.groupBy(F.spark_partition_id().alias("pid"))
+                .agg(F.count(F.lit(1)).alias("n")).collect())
+        return [{"partition_id": r.pid, "rows_out": r.n}
+                for r in sorted(rows)]
+
+    def test_repartitioned_frame(self, spark, tmp_path):
+        df = spark.range(1000).repartition(7)
+        r = CheckpointManager(spark, str(tmp_path)).run_stage(
+            "s1", "fp", lambda: df)
+        assert r.lineage == self.pid_counts(df)
+        assert r.rows == 1000 and len(r.lineage) == 7
+
+    def test_empty_frame(self, spark, tmp_path):
+        df = spark.range(1000).repartition(7).where("id < 0")
+        r = CheckpointManager(spark, str(tmp_path)).run_stage(
+            "s1", "fp", lambda: df)
+        assert r.lineage == [] and r.rows == 0
+        assert r.df.count() == 0
+
+    def test_several_files_per_partition(self, spark, tmp_path):
+        df = spark.range(1000).repartition(7)
+        key = "spark.sql.files.maxRecordsPerFile"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "40")
+        try:
+            r = CheckpointManager(spark, str(tmp_path)).run_stage(
+                "s1", "fp", lambda: df)
+        finally:
+            spark.conf.set(key, old)
+        files = [f for f in os.listdir(tmp_path / "s1" / "data")
+                 if f.startswith("part-")]
+        assert len(files) > 7
+        assert r.lineage == self.pid_counts(df)
+        assert r.rows == 1000
+
+    def test_no_pid_column_written(self, spark, tmp_path, corpus):
+        import pyarrow.parquet as pq
+        root = tmp_path / "ckpt"
+        run_checkpointed_pipeline(spark, corpus, fixture_dictionary(),
+                                  str(root))
+        files = list(root.glob("*/data/*.parquet"))
+        assert files
+        for f in files:
+            assert "_pid" not in pq.read_schema(f).names
+
+    def test_old_pid_checkpoint_resumes_with_fresh_schema(self, spark,
+                                                          tmp_path):
+        compute = lambda: spark.range(50).withColumn("v", F.col("id") + 1)
+        fresh = CheckpointManager(spark, str(tmp_path)).run_stage(
+            "s1", "fp-a", compute)
+        # rewrite the data the way older versions did: a _pid column
+        data = str(tmp_path / "s1" / "data")
+        old = compute().withColumn("_pid", F.spark_partition_id())
+        old.write.mode("overwrite").parquet(data)
+        r = CheckpointManager(spark, str(tmp_path)).run_stage(
+            "s1", "fp-a", compute)
+        assert r.resumed
+        assert r.df.schema == fresh.df.schema
+        assert r.df.count() == 50
+
+
+def test_object_store_root_rejected(spark, tmp_path, monkeypatch, corpus):
+    """Manifests are local files and lineage comes from local footers: an
+    s3:// root must fail before any Spark job, not land in a local
+    directory named "s3:"."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="local filesystem path"):
+        run_checkpointed_pipeline(spark, corpus, fixture_dictionary(),
+                                  "s3://b/ckpt")
+    assert not (tmp_path / "s3:").exists()
 
 
 class TestPipelineResume:

@@ -101,37 +101,42 @@ class TestPipeline:
         assert got == expected
 
 
+def _span(text, kind="text"):
+    return {"kind": kind, "text": text, "offset": 0,
+            "media_ref": "" if kind == "text" else "media://m/0"}
+
+
 class TestFusedTriplePath:
+    @pytest.fixture(scope="class")
+    def edge_docs(self, spark, corpus):
+        from nobletools_spark.pipeline.documents import DOCUMENTS_SCHEMA
+        edge = spark.createDataFrame([
+            ("deid", [_span("Seen by **NAME[nevus] for follow up of melanoma.")]),
+            ("media", [_span("", "image")]),
+            ("empty", [_span(""), _span("Patient has fever.")]),
+            ("none", [_span("The weather was pleasant today.")]),
+            ("dup", [_span("Patient has a rash.")]),
+            ("dup", [_span("The rash has spread.")]),
+            ("hbp", [_span("Patient has high blood pressure (HBP).\n"
+                           "The HBP was treated.\n")]),
+        ], schema=DOCUMENTS_SCHEMA)
+        return corpus.unionByName(edge)
+
     @pytest.mark.parametrize("salt", [0, 3])
-    def test_triples_equal_mention_derived(self, spark, corpus, salt):
+    def test_triples_equal_mention_derived(self, spark, edge_docs, salt):
         """run_pipeline's triples come from the fused document_concepts
         stage; they must equal the triples of the mention rows, edge
         documents included."""
         from nobletools_spark.config import for_search_method
-        from nobletools_spark.pipeline.documents import DOCUMENTS_SCHEMA
         from nobletools_spark.pipeline.stages import (detect_mentions,
                                                       materialize_triples,
                                                       split_sentences)
-
-        def span(text, kind="text"):
-            return {"kind": kind, "text": text, "offset": 0,
-                    "media_ref": "" if kind == "text" else "media://m/0"}
-
-        edge = spark.createDataFrame([
-            ("deid", [span("Seen by **NAME[nevus] for follow up of melanoma.")]),
-            ("media", [span("", "image")]),
-            ("empty", [span(""), span("Patient has fever.")]),
-            ("none", [span("The weather was pleasant today.")]),
-            ("dup", [span("Patient has a rash.")]),
-            ("dup", [span("The rash has spread.")]),
-        ], schema=DOCUMENTS_SCHEMA)
-        docs = corpus.unionByName(edge)
         dico = fixture_dictionary()
         got = [tuple(r) for r in run_pipeline(
-            spark, docs, dico, "best-match", salt_buckets=salt)
+            spark, edge_docs, dico, "best-match", salt_buckets=salt)
             ["triples"].collect()]
         want = materialize_triples(detect_mentions(
-            split_sentences(docs), spark.sparkContext.broadcast(dico),
+            split_sentences(edge_docs), spark.sparkContext.broadcast(dico),
             for_search_method("best-match")), spark, dico)
         assert len(got) == len(set(got))  # "dup" spans two rows
         assert set(got) == {tuple(r) for r in want.collect()}
@@ -140,6 +145,48 @@ class TestFusedTriplePath:
                 ("dup", "C0015230")} <= mc
         assert ("deid", "C0027960") not in mc  # nevus sits in a DeID tag
         assert not {s for s, _ in mc} & {"media", "none"}
+
+    @pytest.mark.parametrize("salt", [0, 3])
+    def test_context_triples_equal_annotate_derived(self, spark, edge_docs,
+                                                    salt):
+        """With a modifier terminology the fused stage runs the acronym
+        pass per document: its triples equal those of the annotated
+        mentions, and the acronym pass changes them ("HBP" is defined as
+        high blood pressure, so the conflicting HBP concept goes)."""
+        from nobletools_spark.config import for_search_method
+        from nobletools_spark.context.lexicon import modifier_dictionary
+        from nobletools_spark.pipeline.stages import (annotate_documents,
+                                                      materialize_triples,
+                                                      split_sentences)
+        from nobletools_spark.terminology.fixture import (FIXTURE_CONCEPTS,
+                                                          FIXTURE_ISA_EDGES)
+        from nobletools_spark.terminology.storage import build_dictionary
+        hbp = dict(cui="C9999999", name="heparin binding protein",
+                   synonyms=["HBP"], sem_types=["Amino Acid"],
+                   sources=["T"])
+        dico = build_dictionary(FIXTURE_CONCEPTS + [hbp],
+                                isa_edges=FIXTURE_ISA_EDGES)
+        ctx = modifier_dictionary()
+        sc = spark.sparkContext
+
+        def mentions_concept(triples):
+            return {(s, o) for s, p, o, _ in triples
+                    if p == "mentions_concept"}
+
+        got = [tuple(r) for r in run_pipeline(
+            spark, edge_docs, dico, "best-match", salt_buckets=salt,
+            context_dico=ctx)["triples"].collect()]
+        want = materialize_triples(annotate_documents(
+            split_sentences(edge_docs), sc.broadcast(dico), sc.broadcast(ctx),
+            for_search_method("best-match")), spark, dico)
+        assert len(got) == len(set(got))
+        assert set(got) == {tuple(r) for r in want.collect()}
+        mc = mentions_concept(got)
+        assert ("hbp", "C0020538") in mc and ("hbp", "C9999999") not in mc
+        no_acronyms = mentions_concept(run_pipeline(
+            spark, edge_docs, dico, "best-match", salt_buckets=salt)
+            ["triples"].collect())
+        assert ("hbp", "C9999999") in no_acronyms
 
 
 class TestParagraphScope:

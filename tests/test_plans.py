@@ -59,16 +59,22 @@ class TestKgPipelinePlans:
         assert "Exchange" not in plan
         assert plan.count("MapInPandas") == 2
 
-    def test_narrow_triples_single_python_stage(self, spark):
-        # the narrow triple path fuses split + match: one mapInPandas over
-        # documents, and the triple distinct is the only Exchange
+    @pytest.mark.parametrize("context", [False, True],
+                             ids=["none", "modifier"])
+    def test_narrow_triples_single_python_stage(self, spark, context):
+        # the triple path fuses split + match (+ the acronym pass with a
+        # modifier terminology): one mapInPandas over documents, and the
+        # triple distinct is the only Exchange
+        from nobletools_spark.context.lexicon import modifier_dictionary
         from nobletools_spark.pipeline.documents import (
             interleave_flat_documents)
         from nobletools_spark.pipeline.stages import run_pipeline
         from nobletools_spark.terminology.fixture import fixture_dictionary
         flat = spark.read.parquet(f"{SF}/documents.parquet")
-        triples = run_pipeline(spark, interleave_flat_documents(flat),
-                               fixture_dictionary())["triples"]
+        triples = run_pipeline(
+            spark, interleave_flat_documents(flat), fixture_dictionary(),
+            context_dico=modifier_dictionary() if context else None,
+        )["triples"]
         plan = plan_of(triples)
         assert plan.count("MapInPandas") == 1
         assert plan.count("Exchange") == 1

@@ -40,7 +40,7 @@ class TestSalting:
             "mentions", "fp",
             lambda: detect_mentions(
                 split_sentences(salt_documents(skewed, 8)), dico_bc))
-        rep = cm.skew_report("mentions")
+        rep = res.skew()
         assert rep["partitions"] == 8
         assert rep["skew_ratio"] is not None and rep["skew_ratio"] < 2.0
 
