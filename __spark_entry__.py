@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nobletools_spark.pipeline.documents import interleave_flat_documents
-from nobletools_spark.pipeline.stages import (detect_mentions,
+from nobletools_spark.pipeline.stages import (document_mentions,
                                               materialize_triples,
                                               run_pipeline, split_sentences)
 from nobletools_spark.relational.queries import QUERIES
@@ -76,7 +76,7 @@ def _kg_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_mentions_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     dico_bc = spark.sparkContext.broadcast(_dico())
-    return detect_mentions(_kg_sentences(spark, sf_dir), dico_bc)
+    return document_mentions(_load_documents(spark, sf_dir), dico_bc)
 
 
 def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,10 +118,9 @@ def _kg_span_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kg_annotated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fused doc-level pass: matcher + acronym state + ConText modifiers."""
     from nobletools_spark.context.lexicon import modifier_dictionary
-    from nobletools_spark.pipeline.stages import annotate_documents
     dico_bc = spark.sparkContext.broadcast(_dico())
     ctx_bc = spark.sparkContext.broadcast(modifier_dictionary())
-    ann = annotate_documents(_kg_sentences(spark, sf_dir), dico_bc, ctx_bc)
+    ann = document_mentions(_load_documents(spark, sf_dir), dico_bc, ctx_bc)
     return ann.select("doc_id", "sent_id", "cui", "start", "end",
                       F.to_json("modifiers").alias("modifiers_json"))
 
@@ -248,14 +247,13 @@ def _kg_instances(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nobletools_spark.mentionsmodel.composition import compose
     from nobletools_spark.mentionsmodel.owlschema import (
         domain_schema_from_owl, generate_domain_owl)
-    from nobletools_spark.pipeline.stages import annotate_documents
     dico = _dico()
     schema = domain_schema_from_owl(generate_domain_owl(
         sorted(dico.concepts), variable="DataOpMention",
         required_modifiers=("Polarity",)))
     dico_bc = spark.sparkContext.broadcast(dico)
     ctx_bc = spark.sparkContext.broadcast(modifier_dictionary())
-    ann = annotate_documents(_kg_sentences(spark, sf_dir), dico_bc, ctx_bc)
+    ann = document_mentions(_load_documents(spark, sf_dir), dico_bc, ctx_bc)
     out = compose(ann, schema, dico)
     return (out["instances"]
             .select("instance_id", "doc_id", "var_name", "cui",

@@ -11,9 +11,10 @@ Behavior-matched to ``tools/AcronymDetector.java``:
 - state cleared per document (NobleCoder.process:273)
 
 The state is document-scoped, so each pass that runs it sees a document's
-sentences in order in one Python stream: ``annotate_documents`` after its
-doc_id shuffle and sort, ``document_concepts`` per document row (no
-shuffle). Documents parallelize freely.
+sentences in order in one Python stream: ``annotate_document`` (fed per
+document row by ``document_mentions``, or per doc_id run of sorted
+sentence rows by ``annotate_documents``) and ``document_concepts`` per
+document row. Documents parallelize freely.
 """
 
 from __future__ import annotations

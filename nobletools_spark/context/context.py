@@ -19,8 +19,9 @@ Behavior-matched to ``tools/ConText.java``:
   non-default beats default, containing-longer span beats contained,
   otherwise nearest to the target wins (ties keep the incumbent)
 
-Pure Python over broadcast dictionaries; executed inside the document-level
-``mapInPandas`` pass (pipeline.stages.annotate_documents).
+Pure Python over broadcast dictionaries; executed per document by
+``pipeline.stages.annotate_document``, inside one ``mapInPandas`` over
+documents or over doc_id-sorted sentence rows.
 """
 
 from __future__ import annotations

@@ -28,8 +28,6 @@ is AQE's skew-join case.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,8 +35,8 @@ from pyspark.sql import types as ST
 
 from ..config import SearchConfig, for_search_method
 from ..terminology.storage import ConceptMeta, Dictionary
-from .stages import (MENTIONS_SCHEMA, detect_mentions, match_sentence,
-                     mention_columns)
+from .stages import (MENTIONS_SCHEMA, _map_rows, detect_mentions,
+                     match_sentence)
 
 _WORDS_SCHEMA = ST.ArrayType(ST.StringType())
 
@@ -98,45 +96,36 @@ def detect_mentions_shuffle(sentences: DataFrame,
     regex_map = dict(base_dico.regex_map) if base_dico is not None else {}
     cfg_final = cfg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = mention_columns()
-            for doc_id, sent_id, text, offset, cand in zip(
-                    pdf["doc_id"], pdf["sent_id"], pdf["text"],
-                    pdf["offset"], pdf["cand"]):
-                mini = Dictionary(build_config=cfg_final)
-                mini.regex_map = regex_map
-                if cand is not None:
-                    tm: dict[str, set] = {}
-                    wm: dict[str, set] = {}
-                    for row in cand:
-                        r = row if isinstance(row, dict) else row.asDict()
-                        tm.setdefault(r["term"], set()).add(r["cui"])
-                        from ..text import tools as T
-                        for w in T.get_words(r["term"]):
-                            wm.setdefault(w, set()).add(r["term"])
-                        if r["cui"] not in mini.concepts:
-                            def arr(x):  # Arrow hands arrays as numpy
-                                return tuple(x) if x is not None else ()
-                            mini.concepts[r["cui"]] = ConceptMeta(
-                                cui=r["cui"], name=r["name"],
-                                synonyms=arr(r["synonyms"]),
-                                sem_types=arr(r["sem_types"]),
-                                sources=arr(r["sources"]),
-                                terms=tuple(
-                                    (t["text"], t["form"]) if isinstance(t, dict)
-                                    else (t.text, t.form)
-                                    for t in arr(r["cterms"])))
-                    mini.term_map = {t: tuple(sorted(s)) for t, s in tm.items()}
-                    mini.word_map = {w: tuple(sorted(s)) for w, s in wm.items()}
-                match_sentence(out, doc_id, sent_id, text, offset, mini,
-                               cfg_final)
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
+    def body(out, doc_id, sent_id, text, offset, cand):
+        mini = Dictionary(build_config=cfg_final)
+        mini.regex_map = regex_map
+        if cand is not None:
+            tm: dict[str, set] = {}
+            wm: dict[str, set] = {}
+            for row in cand:
+                r = row if isinstance(row, dict) else row.asDict()
+                tm.setdefault(r["term"], set()).add(r["cui"])
+                from ..text import tools as T
+                for w in T.get_words(r["term"]):
+                    wm.setdefault(w, set()).add(r["term"])
+                if r["cui"] not in mini.concepts:
+                    def arr(x):  # Arrow hands arrays as numpy
+                        return tuple(x) if x is not None else ()
+                    mini.concepts[r["cui"]] = ConceptMeta(
+                        cui=r["cui"], name=r["name"],
+                        synonyms=arr(r["synonyms"]),
+                        sem_types=arr(r["sem_types"]),
+                        sources=arr(r["sources"]),
+                        terms=tuple(
+                            (t["text"], t["form"]) if isinstance(t, dict)
+                            else (t.text, t.form)
+                            for t in arr(r["cterms"])))
+            mini.term_map = {t: tuple(sorted(s)) for t, s in tm.items()}
+            mini.word_map = {w: tuple(sorted(s)) for w, s in wm.items()}
+        match_sentence(out, doc_id, sent_id, text, offset, mini, cfg_final)
 
-    return (joined
-            .select("doc_id", "sent_id", "text", "offset", "cand")
-            .mapInPandas(run, schema=MENTIONS_SCHEMA))
+    return _map_rows(joined, MENTIONS_SCHEMA, lambda: body,
+                     cols=("doc_id", "sent_id", "text", "offset", "cand"))
 
 
 # broadcast budget above which the match flips to the shuffle-join path

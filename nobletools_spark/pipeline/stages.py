@@ -1,15 +1,13 @@
 """Pipeline stages: documents -> sentences -> mentions -> triples.
 
 Stage architecture (SURVEY.md §7): each stage is a pure DataFrame ->
-DataFrame transform; the heavy lexical work runs inside Arrow-batched
-``mapInPandas`` over a broadcast dictionary (every sentence is
-independent, so the matcher parallelizes embarrassingly). Shapes:
-``split_sentences`` documents -> sentences and ``detect_mentions``
-sentences -> mentions are narrow; ``annotate_documents`` shuffles once on
-doc_id for document state. The triple path, with or without a modifier
-terminology, fuses split + match (+ the acronym pass) into
-``document_concepts`` (documents -> distinct ``(doc_id, cui)``), so its
-only shuffle is the triple dedupe in ``materialize_triples``.
+DataFrame transform; the heavy lexical work runs inside one narrow
+``mapInPandas`` (``_map_rows``) over a broadcast dictionary. A document
+row holds every span, so ``document_concepts`` (triples) and
+``document_mentions`` (mentions, ``annotate_document`` per document with
+ConText) need no shuffle; ``run_pipeline``'s only shuffle is the triple
+dedupe. The checkpointed chain persists sentences, so its mentions come
+from ``detect_mentions`` or ``annotate_documents`` (one doc_id shuffle).
 
 Scale posture:
 - dictionaries travel once per executor via ``SparkContext.broadcast``;
@@ -22,6 +20,9 @@ Scale posture:
 
 from __future__ import annotations
 
+import itertools
+from operator import itemgetter
+from types import SimpleNamespace
 from typing import Iterator
 
 import pandas as pd
@@ -31,6 +32,7 @@ from pyspark.sql import types as ST
 
 from ..config import SearchConfig, for_search_method
 from ..context.acronyms import AcronymState
+from ..context.context import ConTextEngine, ModifierOut, _add_modifier
 from ..matcher.core import process_sentence
 from ..sentence import splitter as SP
 from ..terminology.storage import Dictionary
@@ -64,6 +66,11 @@ MENTIONS_SCHEMA = ST.StructType([
     ST.StructField("sources", ST.ArrayType(ST.StringType()), False),
 ])
 
+ANNOTATED_SCHEMA = ST.StructType(
+    MENTIONS_SCHEMA.fields +
+    [ST.StructField("modifiers",
+                    ST.MapType(ST.StringType(), ST.StringType()), False)])
+
 TRIPLES_SCHEMA = ST.StructType([
     ST.StructField("subj", ST.StringType(), False),
     ST.StructField("pred", ST.StringType(), False),
@@ -85,11 +92,49 @@ def salt_documents(documents: DataFrame, salt_buckets: int = 0) -> DataFrame:
     return documents.repartition(salt_buckets)
 
 
+def _columns(schema: ST.StructType) -> dict[str, list]:
+    """Empty column lists of ``schema``, in field order."""
+    return {name: [] for name in schema.names}
+
+
+def _value(bc):
+    return bc.value if hasattr(bc, "value") else bc
+
+
+def _append(out: dict[str, list], *row) -> None:
+    for col, v in zip(out.values(), row):
+        col.append(v)
+
+
+def _map_rows(frame: DataFrame, schema: ST.StructType, per_task, *broadcasts,
+              cols: tuple = ("doc_id", "spans")) -> DataFrame:
+    """The skeleton of the row-wise stages: one narrow mapInPandas over
+    ``cols`` (a document by default; no other column crosses Arrow).
+    ``per_task(*values)`` runs once per task with each broadcast unwrapped
+    and returns ``body(out, *row)``, called per input row to append rows
+    to ``out``, the ``schema`` column lists. Each Arrow batch yields at
+    most one frame."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        body = per_task(*map(_value, broadcasts))
+        for pdf in batches:
+            out = _columns(schema)
+            for row in zip(*(pdf[c] for c in cols)):
+                body(out, *row)
+            if out["doc_id"]:  # empty frames infer float64 cols, breaking Arrow
+                yield pd.DataFrame(out)
+
+    return frame.select(*cols).mapInPandas(gen, schema=schema)
+
+
 def doc_sentences(spans, doc_type: str = SP.TYPE_MEDICAL_REPORT,
                   filter_headers: bool = True) -> Iterator[tuple]:
     """C1-C6 for one document: yields ``(sent_id, sent_type, text, offset,
     paragraph_id)`` for each kept sentence of its ``kind='text'`` spans,
-    offsets document-absolute. The one splitter loop of every stage."""
+    offsets document-absolute. The one splitter loop of every stage. Null
+    ``spans`` yield nothing, like an empty document."""
+    if spans is None:  # not `spans or ()`: Arrow lists arrive as arrays
+        return
     sent_id = para_base = 0
     for span in spans:  # Arrow struct dicts or Rows, both key by name
         stext = span["text"]
@@ -125,16 +170,11 @@ def split_sentences(documents: DataFrame, doc_type: str = SP.TYPE_MEDICAL_REPORT
     """P1: explode ``kind='text'`` spans into typed sentences with
     document-absolute offsets (C1-C6). Narrow transform, no shuffle."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [(doc_id, *s)
-                    for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-                    for s in doc_sentences(spans, doc_type, filter_headers)]
-            if rows:  # empty frames infer float64 cols, breaking Arrow
-                yield pd.DataFrame.from_records(
-                    rows, columns=SENTENCES_SCHEMA.names)
+    def body(out, doc_id, spans):
+        for s in doc_sentences(spans, doc_type, filter_headers):
+            _append(out, doc_id, *s)
 
-    return documents.mapInPandas(gen, schema=SENTENCES_SCHEMA)
+    return _map_rows(documents, SENTENCES_SCHEMA, lambda: body)
 
 
 def match_text(text: str, dico: Dictionary, cfg: SearchConfig,
@@ -179,11 +219,6 @@ def match_sentence(cols: dict[str, list], doc_id: str, sent_id: int,
     return stext, mentions
 
 
-def mention_columns() -> dict[str, list]:
-    """Empty MENTIONS_SCHEMA column lists, in field order."""
-    return {f.name: [] for f in MENTIONS_SCHEMA.fields}
-
-
 def detect_mentions(sentences: DataFrame, dico_bc,
                     cfg: SearchConfig | None = None) -> DataFrame:
     """P2: the match stage. Broadcast-dictionary probe inside mapInPandas —
@@ -191,18 +226,77 @@ def detect_mentions(sentences: DataFrame, dico_bc,
     table followed by the TC expansion, executed as in-memory dict probes.
     """
     cfg = cfg or for_search_method(None)
+    return _map_rows(
+        sentences, MENTIONS_SCHEMA,
+        lambda dico: lambda out, *sent: match_sentence(out, *sent, dico, cfg),
+        dico_bc, cols=("doc_id", "sent_id", "text", "offset"))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dico: Dictionary = dico_bc.value if hasattr(dico_bc, "value") else dico_bc
-        for pdf in batches:
-            out = mention_columns()
-            for doc_id, sent_id, text, offset in zip(
-                    pdf["doc_id"], pdf["sent_id"], pdf["text"], pdf["offset"]):
-                match_sentence(out, doc_id, sent_id, text, offset, dico, cfg)
-            if out["doc_id"]:  # empty frames infer float64 cols, breaking Arrow
-                yield pd.DataFrame(out)
 
-    return sentences.mapInPandas(gen, schema=MENTIONS_SCHEMA)
+def annotate_document(out: dict[str, list], doc_id: str, sents,
+                      dico: Dictionary, cfg: SearchConfig,
+                      engine: ConTextEngine | None = None) -> None:
+    """P2+P3 for one document: the reference's per-sentence chain
+    (NobleCoder.process:312-336: terminology -> AcronymDetector ->
+    ConText) over ``sents``, the document's ``(sent_id, sent_type, text,
+    offset, paragraph_id)`` in order; appends ANNOTATED_SCHEMA rows to
+    ``out`` (empty modifier maps without ``engine``). It owns the
+    document's state: one ``AcronymState`` (cleared per document, :273),
+    the section modifiers and the paragraph-action modifiers, which scope
+    backward too, so they apply once the document is read."""
+    state = AcronymState(dico)
+    section_mods: list = []
+    rows = _columns(MENTIONS_SCHEMA)
+    slots: list = []      # per row: ConText slot
+    pids: list[int] = []  # per row: paragraph id
+    para: list[tuple] = []  # (pid, action, abs_start, abs_end, ModifierOut)
+    for sent_id, sent_type, text, offset, pid in sents:
+        # headers aren't coded; their section-action modifiers scope every
+        # mention until the next header (kept only if filter_headers=False)
+        if sent_type == SP.TYPE_HEADER:
+            if engine is not None:
+                section_mods = engine.section_modifiers(
+                    SP.filter_deid_tags(text))
+            continue
+
+        stext, mentions = match_sentence(rows, doc_id, sent_id, text,
+                                         offset, dico, cfg, state)
+        pids.extend([int(pid)] * len(mentions))
+        if engine is None:
+            slots.extend({} for _ in mentions)
+            continue
+        sent_slots, global_mods = engine.process_with_globals(stext, mentions)
+        for slot, target in zip(sent_slots, mentions):
+            for smod in section_mods:
+                # local sentence modifiers win over section scope
+                # (NobleMentions.process:158-169)
+                if all(m.is_default for m in slot.get(smod.type, [])):
+                    _add_modifier(slot, smod, target)
+        slots.extend(sent_slots)
+        for gm in global_mods:
+            ga = engine.global_action(gm.cui)
+            if ga is None or ga[0] != "paragraph" or pid < 0:
+                continue
+            for val in engine.modifier_values(gm):
+                para.append((int(pid), ga[1], int(offset) + gm.start,
+                             int(offset) + gm.end, val))
+
+    for pid, action, a_start, a_end, val in para:
+        for start, end, slot, row_pid in zip(
+                rows["start"], rows["end"], slots, pids):
+            fwd = a_end <= start and action in ("forward", "bidirectional")
+            bwd = a_start >= end and action in ("backward", "bidirectional")
+            # local sentence modifiers win (NobleMentions:158-169)
+            if (row_pid == pid and (fwd or bwd) and
+                    all(m.is_default for m in slot.get(val.type, []))):
+                _add_modifier(slot, ModifierOut(type=val.type, value=val.value,
+                                                start=a_start, end=a_end),
+                              SimpleNamespace(start=start, end=end))
+
+    for name, col in rows.items():
+        out[name].extend(col)
+    out["modifiers"].extend(
+        {t: ",".join(m.value for m in lst) for t, lst in slot.items()}
+        for slot in slots)
 
 
 def document_concepts(documents: DataFrame, dico_bc,
@@ -213,166 +307,79 @@ def document_concepts(documents: DataFrame, dico_bc,
     cannot prune columns inside a Python UDF, so the projection is pushed
     in here: no sentence or mention row is built or crosses Arrow. With
     ``acronyms`` each document row gets one ``AcronymState``, the acronym
-    pass of ``annotate_documents``; a doc_id on two input rows is two
+    pass of ``annotate_document``; a doc_id on two input rows is two
     acronym scopes, and its pairs repeat (``mention_triples`` dedupes)."""
     cfg = cfg or for_search_method(None)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dico: Dictionary = dico_bc.value if hasattr(dico_bc, "value") else dico_bc
-
-        def cuis(spans):
+    def concepts(dico):
+        def body(out, doc_id, spans):
             state = AcronymState(dico) if acronyms else None
-            return dict.fromkeys(
-                m.cui for _, _, text, _, _ in doc_sentences(spans)
-                for m in match_text(text, dico, cfg, state)[1])
+            for cui in dict.fromkeys(
+                    m.cui for _, _, text, _, _ in doc_sentences(spans)
+                    for m in match_text(text, dico, cfg, state)[1]):
+                _append(out, doc_id, cui)
+        return body
 
-        for pdf in batches:
-            rows = [(doc_id, cui)
-                    for doc_id, spans in zip(pdf["doc_id"], pdf["spans"])
-                    for cui in cuis(spans)]
-            if rows:  # empty frames infer float64 cols, breaking Arrow
-                yield pd.DataFrame.from_records(rows, columns=["doc_id", "cui"])
-
-    return documents.mapInPandas(gen, schema="doc_id string, cui string")
+    return _map_rows(documents, ST.StructType([
+        ST.StructField("doc_id", ST.StringType()),
+        ST.StructField("cui", ST.StringType())]), concepts, dico_bc)
 
 
-ANNOTATED_SCHEMA = ST.StructType(
-    MENTIONS_SCHEMA.fields +
-    [ST.StructField("modifiers",
-                    ST.MapType(ST.StringType(), ST.StringType()), False)])
+def document_mentions(documents: DataFrame, dico_bc, context_bc=None,
+                      cfg: SearchConfig | None = None) -> DataFrame:
+    """P1+P2(+P3) fused for the mention paths: one narrow mapInPandas over
+    documents; no sentence row crosses Arrow and nothing shuffles. Without
+    a modifier terminology it yields the MENTIONS_SCHEMA rows of
+    ``detect_mentions(split_sentences(documents))`` (no acronym pass);
+    with one, the ANNOTATED_SCHEMA rows of ``annotate_document`` per
+    document row. A doc_id on two input rows is two document scopes
+    (acronyms, sections, paragraphs), as in ``document_concepts``."""
+    cfg = cfg or for_search_method(None)
+    if context_bc is None:
+        def mentions(dico):
+            def body(out, doc_id, spans):
+                for sent_id, _, text, offset, _ in doc_sentences(spans):
+                    match_sentence(out, doc_id, sent_id, text, offset,
+                                   dico, cfg)
+            return body
+        return _map_rows(documents, MENTIONS_SCHEMA, mentions, dico_bc)
+
+    def annotated(dico, cdico):
+        engine = ConTextEngine(cdico)
+        return lambda out, doc_id, spans: annotate_document(
+            out, doc_id, doc_sentences(spans), dico, cfg, engine)
+
+    return _map_rows(documents, ANNOTATED_SCHEMA, annotated, dico_bc,
+                     context_bc)
 
 
 def annotate_documents(sentences: DataFrame, dico_bc, context_bc=None,
                        cfg: SearchConfig | None = None) -> DataFrame:
-    """P2+P3 fused: per document (groupBy doc_id, applyInPandas), run the
-    matcher, then the acronym doc-pass (F1/F2 — the only doc-scoped state),
-    then ConText modifier assignment (F3/F4) per sentence.
-
-    This is the reference's per-sentence chain (NobleCoder.process:312-336:
-    terminology -> AcronymDetector -> ConText) lifted onto Spark: one
-    shuffle on doc_id buys document-ordered sentence processing; documents
-    parallelize across executors. Dictionaries ride broadcasts.
-
-    Implementation: repartition(doc_id) + sortWithinPartitions + a
-    PARTITION-level mapInPandas, NOT groupBy().applyInPandas — the latter
-    invokes Python once per doc (5k docs = 5k calls + 5k Arrow frames,
-    dominating runtime); here one Python stream handles the whole
-    partition, carrying the per-doc acronym/section state across Arrow
-    batch boundaries (sorting guarantees a doc's sentences arrive
-    contiguously even when a doc straddles two batches).
-    """
+    """P2+P3 from sentence rows, for the checkpointed chain
+    (``document_mentions`` reads documents without a shuffle). One
+    shuffle on doc_id plus a sort by (doc_id, sent_id) makes each
+    document one ordered run; a PARTITION-level mapInPandas (not
+    groupBy().applyInPandas, one Python call per document) chains the
+    partition's Arrow batches and runs ``annotate_document`` per doc_id
+    run, wherever the batches cut it."""
     cfg = cfg or for_search_method(None)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from types import SimpleNamespace
-
-        from ..context.context import (ConTextEngine, ModifierOut,
-                                       _add_modifier)
-
-        dico: Dictionary = dico_bc.value if hasattr(dico_bc, "value") else dico_bc
-        engine = None
-        if context_bc is not None:
-            cdico = context_bc.value if hasattr(context_bc, "value") else context_bc
-            engine = ConTextEngine(cdico)
-
-        # doc-scoped state carried across Arrow batches of this partition
-        state: AcronymState | None = None
-        cur_doc = None
-        section_mods: list = []
-        # the current doc's rows await its flush so paragraph-action
-        # modifiers (which scope beyond their sentence, backward included)
-        # can be applied before emission (ConText.getMatchingModifiers)
-        buf = mention_columns()
-        buf_slot: list = []      # per buffered row: ConText slot or None
-        buf_pid: list[int] = []  # per buffered row: paragraph id
-        buf_para: list[tuple] = []  # (pid, action, abs_start, abs_end, ModifierOut)
-        out: dict[str, list] = {f.name: [] for f in ANNOTATED_SCHEMA.fields}
-
-        def flush_doc():
-            for pid, action, a_start, a_end, val in buf_para:
-                if pid < 0:
-                    continue
-                for start, end, slot, row_pid in zip(
-                        buf["start"], buf["end"], buf_slot, buf_pid):
-                    if row_pid != pid:
-                        continue
-                    before = a_end <= start   # modifier before target
-                    after = a_start >= end    # modifier after target
-                    if not ((action in ("forward", "bidirectional") and before)
-                            or (action in ("backward", "bidirectional")
-                                and after)):
-                        continue
-                    cur = slot.get(val.type, [])
-                    # local sentence modifiers win (NobleMentions:158-169)
-                    if all(m.is_default for m in cur):
-                        _add_modifier(
-                            slot,
-                            ModifierOut(type=val.type, value=val.value,
-                                        start=a_start, end=a_end),
-                            SimpleNamespace(start=start, end=end))
-            for name, col in buf.items():
-                out[name].extend(col)
-                col.clear()
-            out["modifiers"].extend(
-                {} if slot is None else
-                {t: ",".join(m.value for m in lst) for t, lst in slot.items()}
-                for slot in buf_slot)
-            buf_slot.clear()
-            buf_pid.clear()
-            buf_para.clear()
-
-        for pdf in batches:
-            for doc_id, sent_id, sent_type, text, offset, pid in zip(
-                    pdf["doc_id"], pdf["sent_id"], pdf["sent_type"],
-                    pdf["text"], pdf["offset"], pdf["paragraph_id"]):
-                if doc_id != cur_doc:
-                    flush_doc()
-                    cur_doc = doc_id
-                    state = AcronymState(dico)  # cleared per doc (:273)
-                    section_mods = []
-
-                # section headers aren't coded, but section-action
-                # modifiers found in them scope every mention until the
-                # next header (ConText HAS_SECTION_ACTION; headers survive
-                # only when the caller split with filter_headers=False)
-                if sent_type == SP.TYPE_HEADER:
-                    section_mods = (
-                        engine.section_modifiers(SP.filter_deid_tags(text))
-                        if engine is not None else [])
-                    continue
-
-                stext, mentions = match_sentence(buf, doc_id, sent_id, text,
-                                                 offset, dico, cfg, state)
-                buf_pid.extend([int(pid)] * len(mentions))
-                if engine is None:
-                    buf_slot.extend([None] * len(mentions))
-                    continue
-                slots, global_mods = engine.process_with_globals(
-                    stext, mentions)
-                for slot, target in zip(slots, mentions):
-                    for smod in section_mods:
-                        # local sentence modifiers win over section
-                        # scope (NobleMentions.process:158-169)
-                        cur = slot.get(smod.type, [])
-                        if all(m.is_default for m in cur):
-                            _add_modifier(slot, smod, target)
-                buf_slot.extend(slots)
-                # paragraph-action modifiers scope to the whole
-                # paragraph; collected here, applied at the doc flush
-                for gm in global_mods:
-                    ga = engine.global_action(gm.cui)
-                    if ga is None or ga[0] != "paragraph":
-                        continue
-                    for val in engine.modifier_values(gm):
-                        buf_para.append((int(pid), ga[1],
-                                         int(offset) + gm.start,
-                                         int(offset) + gm.end, val))
-            # end of Arrow batch: emit completed docs (the current doc may
-            # continue in the next batch, its rows stay buffered)
-            if out["doc_id"]:
+        dico: Dictionary = _value(dico_bc)
+        engine = (ConTextEngine(_value(context_bc))
+                  if context_bc is not None else None)
+        rows = itertools.chain.from_iterable(
+            zip(pdf["doc_id"], zip(pdf["sent_id"], pdf["sent_type"],
+                                   pdf["text"], pdf["offset"],
+                                   pdf["paragraph_id"]))
+            for pdf in batches)
+        out = _columns(ANNOTATED_SCHEMA)
+        for doc_id, run in itertools.groupby(rows, key=itemgetter(0)):
+            annotate_document(out, doc_id, map(itemgetter(1), run),
+                              dico, cfg, engine)
+            if len(out["doc_id"]) >= 10_000:  # bound the buffered frame
                 yield pd.DataFrame(out)
-                out = {f.name: [] for f in ANNOTATED_SCHEMA.fields}
-        flush_doc()
+                out = _columns(ANNOTATED_SCHEMA)
         if out["doc_id"]:
             yield pd.DataFrame(out)
 
@@ -385,9 +392,11 @@ def annotate_documents(sentences: DataFrame, dico_bc, context_bc=None,
 
 def match_stage(sentences: DataFrame, dico_bc, context_bc=None,
                 cfg: SearchConfig | None = None) -> DataFrame:
-    """The match-stage decision of every pipeline entry point: with a
-    modifier terminology the fused doc-level annotate pass (P2+P3, one
-    shuffle on doc_id), otherwise the fully narrow ``detect_mentions``."""
+    """The match-stage decision over sentence rows, used only by the
+    checkpointed chain (its mentions stage reads the persisted
+    sentences): with a modifier terminology ``annotate_documents`` (one
+    shuffle on doc_id), otherwise the narrow ``detect_mentions``. Entry
+    points that read documents use ``document_mentions``."""
     if context_bc is not None:
         return annotate_documents(sentences, dico_bc, context_bc, cfg)
     return detect_mentions(sentences, dico_bc, cfg)
@@ -397,9 +406,9 @@ def concept_stage(documents: DataFrame, dico_bc, context_bc=None,
                   cfg: SearchConfig | None = None) -> DataFrame:
     """The ``(doc_id, cui)`` rows doc->CUI triples are built from:
     ``document_concepts``, with the acronym pass exactly when a modifier
-    terminology is given (as ``match_stage`` runs ``annotate_documents``).
-    ConText assigns modifiers but never changes a CUI, so triples need no
-    more of the annotate pass."""
+    terminology is given (as ``document_mentions`` runs
+    ``annotate_document``). ConText assigns modifiers but never changes a
+    CUI, so triples need no more of the annotate pass."""
     return document_concepts(documents, dico_bc, cfg,
                              acronyms=context_bc is not None)
 
@@ -472,12 +481,11 @@ def run_pipeline(spark: SparkSession, documents: DataFrame, dico: Dictionary,
     cfg = for_search_method(method)
     sc = spark.sparkContext
     docs = salt_documents(documents, salt_buckets)
-    sentences = split_sentences(docs)
     dico_bc = sc.broadcast(dico)
     context_bc = (sc.broadcast(context_dico) if context_dico is not None
                   else None)
-    mentions = match_stage(sentences, dico_bc, context_bc, cfg)
     triples = materialize_triples(
         concept_stage(docs, dico_bc, context_bc, cfg), spark, dico)
-    return {"documents": docs, "sentences": sentences,
-            "mentions": mentions, "triples": triples}
+    return {"documents": docs, "sentences": split_sentences(docs),
+            "mentions": document_mentions(docs, dico_bc, context_bc, cfg),
+            "triples": triples}

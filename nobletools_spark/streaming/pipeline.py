@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..config import for_search_method
 from ..pipeline.documents import DOCUMENTS_SCHEMA
-from ..pipeline.stages import match_stage, split_sentences
+from ..pipeline.stages import document_mentions
 
 
 def read_document_stream(spark: SparkSession, path: str,
@@ -38,16 +38,16 @@ def mention_stream_writer(docs_stream: DataFrame, dico_bc, sink_fn,
                           checkpoint_dir: str | None = None):
     """documents stream -> mentions per micro-batch via foreachBatch.
 
-    ``sink_fn(batch_df, batch_id)`` receives the mention DataFrame —
+    ``sink_fn(batch_df, batch_id)`` receives the batch pipeline's
+    ``document_mentions`` (annotated rows with a modifier terminology) —
     idempotency is the sink's contract (micro-batch replays carry the same
     batch_id). Returns the unstarted DataStreamWriter.
     """
     cfg = for_search_method(method)
 
     def run_batch(batch_df: DataFrame, batch_id: int):
-        mentions = match_stage(split_sentences(batch_df), dico_bc,
-                               context_bc, cfg)
-        sink_fn(mentions, batch_id)
+        sink_fn(document_mentions(batch_df, dico_bc, context_bc, cfg),
+                batch_id)
 
     writer = docs_stream.writeStream.foreachBatch(run_batch)
     if checkpoint_dir:

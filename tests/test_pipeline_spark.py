@@ -1,6 +1,8 @@
 """Spark pipeline end-to-end tests: P0 ingest -> P1 split -> P2 match ->
 P6 triples, the span-sequence invariant, and generation determinism."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -101,6 +103,16 @@ class TestPipeline:
         assert got == expected
 
 
+_PARAGRAPH_TEXT = ("The following were not identified: melanoma, rash.\n"
+                   "Also fever was evaluated.\n\n"
+                   "Second paragraph has nevus.\n")
+
+
+def _rows(df):
+    """A frame's rows as a multiset of string tuples."""
+    return Counter(tuple(str(x) for x in r) for r in df.collect())
+
+
 def _span(text, kind="text"):
     return {"kind": kind, "text": text, "offset": 0,
             "media_ref": "" if kind == "text" else "media://m/0"}
@@ -119,8 +131,22 @@ class TestFusedTriplePath:
             ("dup", [_span("The rash has spread.")]),
             ("hbp", [_span("Patient has high blood pressure (HBP).\n"
                            "The HBP was treated.\n")]),
+            ("para", [_span(_PARAGRAPH_TEXT)]),
         ], schema=DOCUMENTS_SCHEMA)
         return corpus.unionByName(edge)
+
+    @pytest.fixture(scope="class")
+    def hbp_dico(self):
+        """The fixture terminology plus a second concept whose synonym is
+        "HBP", so the acronym pass changes what the "hbp" document gives."""
+        from nobletools_spark.terminology.fixture import (FIXTURE_CONCEPTS,
+                                                          FIXTURE_ISA_EDGES)
+        from nobletools_spark.terminology.storage import build_dictionary
+        hbp = dict(cui="C9999999", name="heparin binding protein",
+                   synonyms=["HBP"], sem_types=["Amino Acid"],
+                   sources=["T"])
+        return build_dictionary(FIXTURE_CONCEPTS + [hbp],
+                                isa_edges=FIXTURE_ISA_EDGES)
 
     @pytest.mark.parametrize("salt", [0, 3])
     def test_triples_equal_mention_derived(self, spark, edge_docs, salt):
@@ -148,7 +174,7 @@ class TestFusedTriplePath:
 
     @pytest.mark.parametrize("salt", [0, 3])
     def test_context_triples_equal_annotate_derived(self, spark, edge_docs,
-                                                    salt):
+                                                    hbp_dico, salt):
         """With a modifier terminology the fused stage runs the acronym
         pass per document: its triples equal those of the annotated
         mentions, and the acronym pass changes them ("HBP" is defined as
@@ -158,14 +184,7 @@ class TestFusedTriplePath:
         from nobletools_spark.pipeline.stages import (annotate_documents,
                                                       materialize_triples,
                                                       split_sentences)
-        from nobletools_spark.terminology.fixture import (FIXTURE_CONCEPTS,
-                                                          FIXTURE_ISA_EDGES)
-        from nobletools_spark.terminology.storage import build_dictionary
-        hbp = dict(cui="C9999999", name="heparin binding protein",
-                   synonyms=["HBP"], sem_types=["Amino Acid"],
-                   sources=["T"])
-        dico = build_dictionary(FIXTURE_CONCEPTS + [hbp],
-                                isa_edges=FIXTURE_ISA_EDGES)
+        dico = hbp_dico
         ctx = modifier_dictionary()
         sc = spark.sparkContext
 
@@ -188,6 +207,92 @@ class TestFusedTriplePath:
             ["triples"].collect())
         assert ("hbp", "C9999999") in no_acronyms
 
+    @pytest.mark.parametrize("salt", [0, 3])
+    @pytest.mark.parametrize("context", [False, True],
+                             ids=["none", "modifier"])
+    def test_mentions_equal_sentence_path(self, spark, edge_docs, hbp_dico,
+                                          context, salt):
+        """run_pipeline's mentions read documents through
+        document_mentions; row for row they equal the mentions of the
+        sentence-row entries (detect_mentions, or annotate_documents with
+        a modifier terminology), edge documents, the acronym pass and a
+        paragraph-action modifier included."""
+        from nobletools_spark.config import for_search_method
+        from nobletools_spark.context.lexicon import modifier_dictionary
+        from nobletools_spark.pipeline.stages import (annotate_documents,
+                                                      detect_mentions,
+                                                      split_sentences)
+        cfg = for_search_method("best-match")
+        ctx = modifier_dictionary() if context else None
+        sc = spark.sparkContext
+        got = run_pipeline(spark, edge_docs, hbp_dico, "best-match",
+                           salt_buckets=salt, context_dico=ctx)["mentions"]
+        sents = split_sentences(edge_docs)
+        want = (annotate_documents(sents, sc.broadcast(hbp_dico),
+                                   sc.broadcast(ctx), cfg) if context
+                else detect_mentions(sents, sc.broadcast(hbp_dico), cfg))
+        assert got.schema == want.schema
+        rows = _rows(got)
+        assert rows == _rows(want)
+        cuis = {(r[0], r[2]) for r in rows}
+        assert (("hbp", "C9999999") in cuis) is not context  # acronym pass
+        if context:
+            pol = {(r.doc_id, r.cui): r.modifiers["Polarity"]
+                   for r in got.where(F.col("doc_id") == "para").collect()}
+            # the list negation scopes over its paragraph: fever, in the
+            # next sentence, is negated; nevus, in the next paragraph, not
+            assert pol[("para", "C0015967")] == "Negative_Polarity"
+            assert pol[("para", "C0027960")] == "Positive_Polarity"
+
+    def test_annotate_batches_cut_documents(self, spark, edge_docs,
+                                            hbp_dico):
+        """annotate_documents annotates each doc_id run of its sorted
+        sentence stream wherever the Arrow batches cut it: with two-row
+        batches most documents straddle batches, and no row changes."""
+        from nobletools_spark.config import for_search_method
+        from nobletools_spark.context.lexicon import modifier_dictionary
+        from nobletools_spark.pipeline.stages import (annotate_documents,
+                                                      split_sentences)
+        sc = spark.sparkContext
+        dico_bc = sc.broadcast(hbp_dico)
+        ctx_bc = sc.broadcast(modifier_dictionary())
+        cfg = for_search_method("best-match")
+
+        def annotated():
+            return _rows(annotate_documents(split_sentences(edge_docs),
+                                            dico_bc, ctx_bc, cfg))
+
+        want = annotated()
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        default = spark.conf.get(key)
+        spark.conf.set(key, "2")
+        try:
+            got = annotated()
+        finally:
+            spark.conf.set(key, default)
+        assert got == want
+
+    @pytest.mark.parametrize("context", [False, True],
+                             ids=["none", "modifier"])
+    def test_null_spans_yield_nothing(self, spark, edge_docs, context):
+        """A document row with null spans yields no sentence, concept or
+        mention, like an empty document, and the job goes on: every other
+        document's sentences, mentions and triples are unchanged."""
+        from nobletools_spark.context.lexicon import modifier_dictionary
+        null_row = spark.createDataFrame(
+            [("nullspans", None)], "doc_id string, spans array<struct<"
+            "kind:string, text:string, media_ref:string, offset:int>>")
+        ctx = modifier_dictionary() if context else None
+        dico = fixture_dictionary()
+
+        def outputs(docs):
+            out = run_pipeline(spark, docs, dico, "best-match",
+                               context_dico=ctx)
+            return {k: _rows(out[k])
+                    for k in ("sentences", "mentions", "triples")}
+
+        assert outputs(edge_docs.unionByName(null_row)) == outputs(edge_docs)
+
 
 class TestParagraphScope:
     def test_paragraph_action_scopes_across_sentences(self, spark):
@@ -196,12 +301,8 @@ class TestParagraphScope:
         from nobletools_spark.pipeline.documents import DOCUMENTS_SCHEMA
         from nobletools_spark.pipeline.stages import (annotate_documents,
                                                       split_sentences)
-        text = ("The following were not identified: melanoma, rash.\n"
-                "Also fever was evaluated.\n\n"
-                "Second paragraph has nevus.\n")
         docs = spark.createDataFrame(
-            [("p1", [{"kind": "text", "text": text, "media_ref": "",
-                      "offset": 0}])], schema=DOCUMENTS_SCHEMA)
+            [("p1", [_span(_PARAGRAPH_TEXT)])], schema=DOCUMENTS_SCHEMA)
         sents = split_sentences(docs)
         # the blank line splits paragraphs
         pids = {r.text.strip()[:6]: r.paragraph_id for r in sents.collect()}

@@ -59,26 +59,39 @@ class TestKgPipelinePlans:
         assert "Exchange" not in plan
         assert plan.count("MapInPandas") == 2
 
-    @pytest.mark.parametrize("context", [False, True],
-                             ids=["none", "modifier"])
-    def test_narrow_triples_single_python_stage(self, spark, context):
-        # the triple path fuses split + match (+ the acronym pass with a
-        # modifier terminology): one mapInPandas over documents, and the
-        # triple distinct is the only Exchange
+    @staticmethod
+    def pipeline(spark, context):
         from nobletools_spark.context.lexicon import modifier_dictionary
         from nobletools_spark.pipeline.documents import (
             interleave_flat_documents)
         from nobletools_spark.pipeline.stages import run_pipeline
         from nobletools_spark.terminology.fixture import fixture_dictionary
         flat = spark.read.parquet(f"{SF}/documents.parquet")
-        triples = run_pipeline(
+        return run_pipeline(
             spark, interleave_flat_documents(flat), fixture_dictionary(),
-            context_dico=modifier_dictionary() if context else None,
-        )["triples"]
-        plan = plan_of(triples)
+            context_dico=modifier_dictionary() if context else None)
+
+    @pytest.mark.parametrize("context", [False, True],
+                             ids=["none", "modifier"])
+    def test_narrow_triples_single_python_stage(self, spark, context):
+        # the triple path fuses split + match (+ the acronym pass with a
+        # modifier terminology): one mapInPandas over documents, and the
+        # triple distinct is the only Exchange
+        plan = plan_of(self.pipeline(spark, context)["triples"])
         assert plan.count("MapInPandas") == 1
         assert plan.count("Exchange") == 1
         assert "Exchange hashpartitioning(subj" in plan
+
+    @pytest.mark.parametrize("context", [False, True],
+                             ids=["none", "modifier"])
+    def test_mentions_single_python_stage(self, spark, context):
+        # the mention path reads documents directly: one mapInPandas
+        # splits, matches (and annotates with a modifier terminology);
+        # a document row holds its whole state, so no doc_id shuffle/sort
+        plan = plan_of(self.pipeline(spark, context)["mentions"])
+        assert plan.count("MapInPandas") == 1
+        assert "Exchange" not in plan
+        assert "Sort" not in plan
 
     def test_context_pass_single_doc_shuffle(self, spark):
         from nobletools_spark.context.lexicon import modifier_dictionary

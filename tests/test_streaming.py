@@ -6,7 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from nobletools_spark.pipeline.documents import generate_documents
-from nobletools_spark.pipeline.stages import detect_mentions, split_sentences
+from nobletools_spark.pipeline.stages import (annotate_documents,
+                                              detect_mentions,
+                                              split_sentences)
 from nobletools_spark.streaming.pipeline import (mention_stream_writer,
                                                  read_document_stream,
                                                  sessionized_user_activity,
@@ -17,29 +19,36 @@ SF = "/root/testdata/sf0.001"
 
 
 class TestDocumentStream:
-    def test_stream_matches_batch(self, spark, tmp_path):
+    @pytest.mark.parametrize("context", [False, True],
+                             ids=["none", "modifier"])
+    def test_stream_matches_batch(self, spark, tmp_path, context):
+        from nobletools_spark.context.lexicon import modifier_dictionary
         docs = generate_documents(spark, 24, seed=13, partitions=4)
         src = str(tmp_path / "src")
         docs.write.mode("overwrite").parquet(src)
 
-        dico_bc = spark.sparkContext.broadcast(fixture_dictionary())
+        sc = spark.sparkContext
+        dico_bc = sc.broadcast(fixture_dictionary())
+        ctx_bc = sc.broadcast(modifier_dictionary()) if context else None
         collected = []
 
+        def key(r):
+            return (r.doc_id, r.sent_id, r.cui, r.start, r.end,
+                    str(sorted(r.asDict().get("modifiers", {}).items())))
+
         def sink(batch_df, batch_id):
-            collected.append(
-                {(r.doc_id, r.sent_id, r.cui, r.start, r.end)
-                 for r in batch_df.collect()})
+            collected.append({key(r) for r in batch_df.collect()})
 
         stream = read_document_stream(spark, src, max_files_per_trigger=2)
-        q = (mention_stream_writer(stream, dico_bc, sink,
+        q = (mention_stream_writer(stream, dico_bc, sink, context_bc=ctx_bc,
                                    checkpoint_dir=str(tmp_path / "ckpt"))
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
 
-        batch = detect_mentions(
-            split_sentences(spark.read.parquet(src)), dico_bc)
-        expected = {(r.doc_id, r.sent_id, r.cui, r.start, r.end)
-                    for r in batch.collect()}
+        sents = split_sentences(spark.read.parquet(src))
+        batch = (annotate_documents(sents, dico_bc, ctx_bc) if context
+                 else detect_mentions(sents, dico_bc))
+        expected = {key(r) for r in batch.collect()}
         got = set().union(*collected) if collected else set()
         assert got == expected
         assert len(collected) >= 2  # really micro-batched
