@@ -47,10 +47,12 @@ def _ship_package(spark: SparkSession) -> None:
     _sys.path.insert(0, os.path.join(root, "scripts"))
     from package_pyfiles import build
     import tempfile
-    out = os.path.join(tempfile.gettempdir(),
-                       f"nobletools_spark_pyfiles_{os.getpid()}.zip")
-    if not os.path.exists(out):
-        build(out)
+    # built fresh under a new name: a zip found in the temp dir may hold
+    # another process's (older) sources
+    fd, out = tempfile.mkstemp(prefix="nobletools_spark_pyfiles_",
+                               suffix=".zip")
+    os.close(fd)
+    build(out)
     sc.addPyFile(out)
     sc._nobletools_pyfiles = True
 

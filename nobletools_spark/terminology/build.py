@@ -194,14 +194,16 @@ def build_blacklist_df(word_index: DataFrame, word_stats: DataFrame,
     ttop_arr = F.array(*[F.lit(w) for w in ttop]) if ttop else F.array().cast("array<string>")
 
     hot_index = word_index.where(F.col("word").isin(top) if top else F.lit(False))
-    allowed = F.when(F.array_contains(ttop_arr, F.col("word")) if ttop else F.lit(False),
-                     ttop_arr).otherwise(top_arr)
-    kept = F.filter(
-        "terms",
-        lambda t: F.forall(F.split(t, " "),
-                           lambda tw: F.array_contains(F.col("_allowed"), tw)))
-    return (hot_index.withColumn("_allowed", allowed)
-            .select("word", kept.alias("terms")))
+    super_hot = F.array_contains(ttop_arr, F.col("word")) if ttop else F.lit(False)
+
+    def kept(allowed):
+        return F.filter("terms", lambda t: F.forall(
+            F.split(t, " "), lambda tw: F.array_contains(allowed, tw)))
+    # the allowed set is picked once per row, outside the lambdas: a
+    # column they captured would be inlined and re-picked per term word
+    return hot_index.select(
+        "word", F.when(super_hot, kept(ttop_arr)).otherwise(kept(top_arr))
+        .alias("terms"))
 
 
 def compact_word_index(term_index: DataFrame, word_stats: DataFrame) -> DataFrame:

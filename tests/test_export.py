@@ -68,6 +68,42 @@ def test_pyfiles_zip_importable(tmp_path):
     assert r2.stdout.strip() == "ok"
 
 
+def test_shipped_zip_has_current_sources(tmp_path, monkeypatch):
+    """The entry's self-applied --py-files zip: a zip another process left
+    in the temp dir (planted under the per-PID name it once reused, as a
+    process with a recycled PID would find it) is never shipped; the
+    shipped zip holds exactly the package sources as they are now."""
+    import importlib.util
+    import os
+    import tempfile
+    import types
+    import zipfile
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "spark_entry_ship", os.path.join(repo, "__spark_entry__.py"))
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stale = tmp_path / f"nobletools_spark_pyfiles_{os.getpid()}.zip"
+    with zipfile.ZipFile(stale, "w") as zf:
+        zf.writestr("nobletools_spark/__init__.py", "STALE = True\n")
+    shipped = []
+    sc = types.SimpleNamespace(addPyFile=shipped.append)
+    entry._ship_package(types.SimpleNamespace(sparkContext=sc))
+
+    assert len(shipped) == 1
+    want = {}
+    for dirpath, _, files in os.walk(os.path.join(repo, "nobletools_spark")):
+        for f in files:
+            if f.endswith(".py"):
+                full = os.path.join(dirpath, f)
+                with open(full, "rb") as fh:
+                    want[os.path.relpath(full, repo)] = fh.read()
+    with zipfile.ZipFile(shipped[0]) as zf:
+        assert {n: zf.read(n) for n in zf.namelist()} == want
+
+
 def test_html_export_pages_and_index(spark, tmp_path):
     """B2: per-document annotated HTML + index (HTMLExporter analog)."""
     import os

@@ -3,6 +3,8 @@
 cartesian products in scale paths) asserted against `.explain` output so
 refactors can't silently regress them."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +15,20 @@ def plan_of(df, mode: str = "simple") -> str:
     # formatted mode renders PushedFilters/ReadSchema untruncated
     jvm = df.sparkSession._jvm
     return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+
+
+def lambda_bodies(df) -> list[str]:
+    """The body of every ``lambdafunction(...)`` in the executed plan,
+    nested ones included (each up to its balancing paren)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    bodies = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        bodies.append(plan[m.end():i - 1])
+    return bodies
 
 
 def scan_block(df, table: str) -> str:
@@ -120,6 +136,43 @@ class TestScalePathPlans:
         plan = plan_of(star)
         assert "CartesianProduct" not in plan
         assert "collect_list" not in plan    # star emission is window-min
+
+    def test_minhash_lambdas_do_not_rebuild_shingles(self, spark):
+        # a column that a lambda captures counts as one reference, so
+        # projection collapse inlines its producer into the lambda, which
+        # runs once per array element: a per-slot lambda capturing the
+        # shingle hashes rebuilt every shingle set once per slot
+        from nobletools_spark.textdata.dedup import (lsh_candidate_pairs,
+                                                     minhash_signatures,
+                                                     shingle_array)
+        d = spark.read.parquet(f"{SF}/documents.parquet")
+        bodies = lambda_bodies(
+            lsh_candidate_pairs(minhash_signatures(shingle_array(d))))
+        assert bodies
+        assert not [b for b in bodies if "array_distinct" in b]
+
+    def test_unit_norm_computed_once_per_vector(self, spark):
+        # a norm inside the per-element lambda is O(dim^2) per vector
+        from nobletools_spark.textdata.dedup import (
+            embedding_lsh_neardup_pairs, embedding_neardup_pairs)
+        e = spark.read.parquet(f"{SF}/embeddings.parquet")
+        for df in (embedding_neardup_pairs(e, threshold=0.4),
+                   embedding_lsh_neardup_pairs(e, threshold=0.4, dim=64)):
+            bodies = lambda_bodies(df)
+            assert bodies
+            assert not [b for b in bodies if "aggregate(" in b]
+
+    def test_blacklist_allowed_set_picked_outside_lambdas(self, spark):
+        # the hot/super-hot choice depends only on the row's word; inside
+        # the per-term-word lambda it would be re-evaluated per element
+        from nobletools_spark.terminology.build import build_blacklist_df
+        stats = spark.createDataFrame([(f"w{i}", 200 + i) for i in range(20)],
+                                      "word string, term_count long")
+        index = spark.createDataFrame([("w19", ["w19 w18", "w19 x"])],
+                                      "word string, terms array<string>")
+        bodies = lambda_bodies(build_blacklist_df(index, stats, 10_000))
+        assert bodies
+        assert not [b for b in bodies if "CASE WHEN" in b]
 
     def test_line_dedup_cross_doc_test_is_partial_aggregated(self, spark):
         # the ">=2 distinct docs" test must be a groupBy on the line hash

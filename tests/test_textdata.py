@@ -43,6 +43,29 @@ class TestMinHash:
         assert sig[1] == sig[2] != sig[3]
         assert len(sig[1]) == D.DEFAULT_NUM_HASHES
 
+    def test_signatures_and_band_keys_golden(self, spark):
+        # band_keys is the persisted state of incremental and streaming
+        # dedup: any change to the signature expression must keep these
+        # rows bit-identical. Covers the empty-set sentinel three ways:
+        # empty text, a one-token doc (no 3-gram) and a null array.
+        import hashlib
+        df = spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog"),
+             (2, "the quick brown fox jumps over a lazy cat"),
+             (3, ""), (4, "single"),
+             (5, "completely different words with nothing shared at all")],
+            "doc_id long, text string")
+        shingled = D.shingle_array(df).unionByName(spark.createDataFrame(
+            [(6, None)], "doc_id long, shingles array<string>"))
+        sig = D.minhash_signatures(shingled)
+        rows = sorted((r.doc_id, tuple(r.sig)) for r in sig.collect())
+        keys = sorted(tuple(r) for r in D.band_keys(sig).collect())
+        md5 = lambda x: hashlib.md5(str(x).encode()).hexdigest()[:12]
+        assert [len(s) for _, s in rows] == [D.DEFAULT_NUM_HASHES] * 6
+        assert md5(rows) == "171f9320310a"
+        assert len(keys) == 6 * D.DEFAULT_BANDS
+        assert md5(keys) == "5ba931180a0a"
+
     def test_lsh_finds_planted_dups_and_verify_filters(self, spark):
         base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
         df = spark.createDataFrame(
