@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nobletools_spark.pipeline.documents import interleave_flat_documents
-from nobletools_spark.pipeline.stages import (document_mentions,
+from nobletools_spark.pipeline.stages import (document_concepts,
+                                              document_mentions,
                                               materialize_triples,
                                               run_pipeline, split_sentences)
 from nobletools_spark.relational.queries import QUERIES
@@ -77,8 +78,16 @@ def _kg_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_mentions_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mention rows, for the two entries that report mentions."""
     dico_bc = spark.sparkContext.broadcast(_dico())
     return document_mentions(_load_documents(spark, sf_dir), dico_bc)
+
+
+def _kg_concepts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, cui)`` of every document-level KG entry: one
+    ``document_concepts`` pass, so no mention row is built."""
+    dico_bc = spark.sparkContext.broadcast(_dico())
+    return document_concepts(_load_documents(spark, sf_dir), dico_bc)
 
 
 def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,7 +103,7 @@ def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return materialize_triples(_kg_mentions_raw(spark, sf_dir), spark, _dico())
+    return materialize_triples(_kg_concepts(spark, sf_dir), spark, _dico())
 
 
 def _kg_mention_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,16 +146,15 @@ def _kg_ancestors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P5+P6: mention CUIs rewritten through the connected-components
+    """P5+P6: document CUIs rewritten through the connected-components
     canonical map before triple materialization."""
     from nobletools_spark.graph.canonicalize import canonical_map
-    from nobletools_spark.pipeline.stages import materialize_triples
     from nobletools_spark.terminology.build import build_terminology
     dico = _dico()
     tables = build_terminology(spark, list(dico.concepts.values()),
                                dico.build_config)
     cmap = canonical_map(tables["term_index"], tables["code_xref"])
-    return materialize_triples(_kg_mentions_raw(spark, sf_dir), spark, dico,
+    return materialize_triples(_kg_concepts(spark, sf_dir), spark, dico,
                                canonical=cmap)
 
 
@@ -179,41 +187,34 @@ def _kg_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-derived KG enrichment: PMI-weighted concept co-occurrence
-    edges over the detected mentions (two bounded shuffles; see
+    edges over the documents' concepts (two bounded shuffles; see
     graph/analytics.py::concept_cooccurrence_pmi)."""
     from nobletools_spark.graph.analytics import concept_cooccurrence_pmi
-    m = _kg_mentions_raw(spark, sf_dir).select("doc_id", "cui")
-    return concept_cooccurrence_pmi(m).orderBy("cui_a", "cui_b")
+    # the pairs, document frequencies and corpus size each read the
+    # concepts — materialize once or the matcher replays per reference
+    dc = _kg_concepts(spark, sf_dir).localCheckpoint(eager=True)
+    return concept_cooccurrence_pmi(dc).orderBy("cui_a", "cui_b")
 
 
 def _kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the co-occurrence graph, singleton
     concepts included (graph/analytics.py::connected_components — the
     hybrid union-find / min-label engine)."""
-    from nobletools_spark.graph.analytics import connected_components
-    dc = (_kg_mentions_raw(spark, sf_dir)
-          .select("doc_id", "cui").distinct())
-    # dc feeds both self-join sides AND the vertex frame — materialize
-    # once or the mention pipeline replays per reference
-    dc = dc.localCheckpoint(eager=True)
-    a = dc.select("doc_id", F.col("cui").alias("a"))
-    b = dc.select("doc_id", F.col("cui").alias("b"))
-    edges = (a.join(b, "doc_id").where(F.col("a") < F.col("b"))
-             .select("a", "b").distinct())
-    verts = dc.select("cui").distinct()
-    return connected_components(edges, vertices=verts).orderBy("cui")
+    from nobletools_spark.graph.analytics import (concept_pairs,
+                                                  connected_components)
+    # the concepts feed both the edges and the vertex frame — materialize
+    # once or the matcher replays per reference
+    dc = _kg_concepts(spark, sf_dir).localCheckpoint(eager=True)
+    return connected_components(concept_pairs(dc).distinct(),
+                                vertices=dc.select("cui")).orderBy("cui")
 
 
 def _kg_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concept importance over the CORPUS-derived graph: weighted
     PageRank on the co-occurrence edges, weight = shared-doc count (both
     directions — the graph is undirected)."""
-    from nobletools_spark.graph.analytics import pagerank
-    dc = (_kg_mentions_raw(spark, sf_dir)
-          .select("doc_id", "cui").distinct())
-    a = dc.select("doc_id", F.col("cui").alias("a"))
-    b = dc.select("doc_id", F.col("cui").alias("b"))
-    pairs = (a.join(b, "doc_id").where(F.col("a") < F.col("b"))
+    from nobletools_spark.graph.analytics import concept_pairs, pagerank
+    pairs = (concept_pairs(_kg_concepts(spark, sf_dir))
              .groupBy("a", "b")
              .agg(F.count(F.lit(1)).cast("double").alias("w")))
     pairs = pairs.localCheckpoint(eager=True)  # referenced twice below
@@ -228,13 +229,9 @@ def _kg_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clustering structure of the co-occurrence graph: per-concept
     triangle counts (graph/analytics.py::triangle_counts — wedge join +
     closure join, skew handled like the pair count)."""
-    from nobletools_spark.graph.analytics import triangle_counts
-    dc = (_kg_mentions_raw(spark, sf_dir)
-          .select("doc_id", "cui").distinct())
-    a = dc.select("doc_id", F.col("cui").alias("a"))
-    b = dc.select("doc_id", F.col("cui").alias("b"))
-    edges = (a.join(b, "doc_id").where(F.col("a") < F.col("b"))
-             .select("a", "b").distinct())
+    from nobletools_spark.graph.analytics import (concept_pairs,
+                                                  triangle_counts)
+    edges = concept_pairs(_kg_concepts(spark, sf_dir)).distinct()
     return triangle_counts(edges).orderBy("cui")
 
 

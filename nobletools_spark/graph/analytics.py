@@ -16,9 +16,11 @@ Scale posture:
   nothing collects to the driver. An eager ``localCheckpoint`` per iteration
   truncates lineage — without it iteration k replays all k-1 prior joins
   (the same guard ``bpe_train_distributed`` uses).
-- ``concept_cooccurrence_pmi`` shuffles once on ``doc_id``; the per-document
-  pair explosion is bounded by (distinct concepts per doc)^2, which is small
-  and independent of corpus size. Document frequencies are
+- ``concept_pairs`` is the one co-occurrence self-join (PMI, and the
+  weighted PageRank, component and triangle entries over
+  ``document_concepts``): one shuffle on ``doc_id``; the per-document pair
+  explosion is bounded by (distinct concepts per doc)^2, small and
+  independent of corpus size. PMI's document frequencies are
   vocabulary-bounded and the corpus size rides the plan as a single-row
   cross join, so the whole query is two shuffles at any corpus scale.
 """
@@ -177,18 +179,30 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
                     .cast("long").alias("triangles")))
 
 
+def concept_pairs(doc_concepts: DataFrame) -> DataFrame:
+    """``(doc_id, cui)`` rows -> ``(a, b)``: one row per document and
+    unordered concept pair co-occurring in it, with ``a < b``. Repeated
+    ``(doc_id, cui)`` rows count once. Count the rows for co-occurrence
+    weights; take ``distinct()`` for the edge set."""
+    dc = doc_concepts.select("doc_id", "cui").distinct()
+    return (dc.select("doc_id", F.col("cui").alias("a"))
+            .join(dc.select("doc_id", F.col("cui").alias("b")), "doc_id")
+            .where(F.col("a") < F.col("b"))
+            .select("a", "b"))
+
+
 def concept_cooccurrence_pmi(doc_concepts: DataFrame,
                              round_dp: int = 4) -> DataFrame:
-    """PMI-weighted co-occurrence edges from ``(doc_id, cui)`` mention rows.
+    """PMI-weighted co-occurrence edges from ``(doc_id, cui)`` rows.
 
     For each unordered concept pair (a < b) appearing in the same document:
 
         pmi(a, b) = ln( n_ab * N / (n_a * n_b) )
 
-    with N = number of distinct documents carrying at least one mention and
+    with N = number of distinct documents carrying at least one concept and
     n_x = document frequency. Output ``(cui_a, cui_b, n_docs, pmi)``.
 
-    Plan: distinct (doc_id, cui) -> self-join on doc_id (one shuffle; the
+    Plan: distinct (doc_id, cui) -> ``concept_pairs`` (one shuffle; the
     per-doc explosion is bounded by the per-doc concept count) -> pair
     counts (second shuffle) -> broadcast doc-frequency joins (the concept
     vocabulary is dictionary-bounded) with N as an in-plan scalar.
@@ -199,11 +213,8 @@ def concept_cooccurrence_pmi(doc_concepts: DataFrame,
     n_df = dc.agg(F.countDistinct("doc_id").cast("double").alias("n_corpus"))
     df_freq = dc.groupBy("cui").agg(
         F.count(F.lit(1)).cast("double").alias("df"))
-    a = dc.select("doc_id", F.col("cui").alias("cui_a"))
-    b = dc.select("doc_id", F.col("cui").alias("cui_b"))
-    pairs = (a.join(b, "doc_id")
-             .where(F.col("cui_a") < F.col("cui_b"))
-             .groupBy("cui_a", "cui_b")
+    pairs = (concept_pairs(dc)
+             .groupBy(F.col("a").alias("cui_a"), F.col("b").alias("cui_b"))
              .agg(F.count(F.lit(1)).alias("n_docs")))
     return (pairs
             .join(F.broadcast(df_freq.withColumnRenamed("cui", "cui_a")

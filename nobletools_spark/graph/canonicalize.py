@@ -59,9 +59,12 @@ def canonical_map(term_index: DataFrame, code_xref: DataFrame | None = None,
                        F.col("comp").alias("canonical_cui"))
 
 
-def canonicalize_mentions(mentions: DataFrame, mapping: DataFrame) -> DataFrame:
-    """Rewrite mention CUIs to canonical ones; unmapped CUIs (singleton
-    components) stay as-is. Mapping is dictionary-scale -> broadcast."""
-    return (mentions.join(F.broadcast(mapping), "cui", "left")
-            .withColumn("cui", F.coalesce("canonical_cui", "cui"))
+def canonicalize_mentions(mentions: DataFrame, mapping: DataFrame,
+                          col: str = "cui") -> DataFrame:
+    """Rewrite the CUIs in column ``col`` (mention CUIs, isa triple ends)
+    to canonical ones; unmapped CUIs (singleton components) stay as-is.
+    Mapping is dictionary-scale -> broadcast."""
+    cmap = F.broadcast(mapping.withColumnRenamed("cui", col))
+    return (mentions.join(cmap, col, "left")
+            .withColumn(col, F.coalesce("canonical_cui", col))
             .drop("canonical_cui"))

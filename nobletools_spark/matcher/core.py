@@ -223,18 +223,14 @@ def get_original_term(text: str, term: str, norm_map: dict[str, str]) -> str:
 
 
 def get_annotations(matched_term: str, search_string: str,
-                    original_words: list[str],
-                    index: "SentenceIndex | None" = None
-                    ) -> list[tuple[str, int]]:
+                    index: SentenceIndex) -> list[tuple[str, int]]:
     """NobleCoderUtils.getAnnotations:492-507 — word-level spans; offsets are
     found with indexOf(word, running_n) over the raw sentence. ``index``
-    (a SentenceIndex over ``original_words``) replaces the per-concept
-    scan of every sentence word with a lookup of the matched words'
-    occurrence positions — same emission order (sentence order, every
-    occurrence) and the same running-offset find() anchor."""
+    (a SentenceIndex over the sentence's original words) replaces the
+    per-concept scan of every sentence word with a lookup of the matched
+    words' occurrence positions — same emission order (sentence order,
+    every occurrence) and the same running-offset find() anchor."""
     matched_words = set(_term_words(matched_term))
-    if index is None:
-        index = SentenceIndex(original_words)
     cand: list[int] = []
     for w in matched_words:
         lst = index.pos.get(w)
@@ -267,8 +263,7 @@ class SentenceIndex:
 
 def split_mentions(concept_matched_term: str, search_string: str,
                    annotations: list[tuple[str, int]],
-                   max_word_gap: int,
-                   index: SentenceIndex | None = None
+                   max_word_gap: int, index: SentenceIndex | None
                    ) -> list[list[tuple[str, int]]]:
     """Mention.getMentions:207-270 — split one concept's word annotations
     into one mention per contiguous word window; fall back to a single
@@ -277,13 +272,13 @@ def split_mentions(concept_matched_term: str, search_string: str,
     here the candidate i's come straight from the index's position lists
     and the window test is a bisect per term word — identical truth value
     (t ∈ words[i:n] iff some position of t lies in [i, n)) without
-    touching the non-term words at all."""
+    touching the non-term words at all. ``index`` (over
+    ``get_words(search_string)``) is read only when the annotations do
+    not already hold one word per term word."""
     twords = _term_words(concept_matched_term)
     if len(annotations) == len(twords):
         return [annotations]
 
-    if index is None:
-        index = SentenceIndex(T.get_words(search_string))
     words = index.words
     span = (max_word_gap + 1) * (len(twords) - 1) + 1
     plists = []
@@ -519,8 +514,7 @@ def process_sentence(text: str, dico: Dictionary,
                 continue
             if orig_index is None:
                 orig_index = SentenceIndex(nwc.original)
-            annotations = get_annotations(oterm, text, nwc.original,
-                                          orig_index)
+            annotations = get_annotations(oterm, text, orig_index)
             if not annotations:
                 continue
             if sent_index is None and len(annotations) != len(_term_words(oterm)):

@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
-from ..config import SearchConfig, for_search_method
+from ..config import CUSTOM_MATCH, SearchConfig, for_search_method
+from ..text import tools as T
 from ..terminology.storage import ConceptMeta, Dictionary
 from .stages import (MENTIONS_SCHEMA, _map_rows, detect_mentions,
                      match_sentence)
@@ -42,8 +43,6 @@ _WORDS_SCHEMA = ST.ArrayType(ST.StringType())
 
 
 def _normalize_words_udf(cfg: SearchConfig):
-    from ..text import tools as T
-
     @F.pandas_udf(_WORDS_SCHEMA)
     def norm(texts: pd.Series) -> pd.Series:
         return pd.Series([
@@ -60,9 +59,10 @@ def detect_mentions_shuffle(sentences: DataFrame,
                             base_dico: Dictionary | None = None) -> DataFrame:
     """Shuffle-join mention detection over persisted dictionary tables.
     ``tables`` needs word_index_compact, term_index, concepts; regex
-    patterns (tiny) ride the optional ``base_dico`` broadcast."""
-    cfg = for_search_method(None, cfg, compacted=True) if cfg is None \
-        else for_search_method(None, cfg, compacted=True)
+    patterns (tiny) ride the optional ``base_dico`` broadcast. ``cfg``
+    keeps its search method; only the compacted-index overrides apply."""
+    cfg = for_search_method(CUSTOM_MATCH, cfg or for_search_method(None),
+                            compacted=True)
     spark = sentences.sparkSession
 
     sent = sentences.withColumn(
@@ -94,35 +94,31 @@ def detect_mentions_shuffle(sentences: DataFrame,
     joined = sent.join(packed, "_sid", "left")
 
     regex_map = dict(base_dico.regex_map) if base_dico is not None else {}
-    cfg_final = cfg
+
+    def arr(x):  # Arrow hands arrays as numpy
+        return tuple(x) if x is not None else ()
 
     def body(out, doc_id, sent_id, text, offset, cand):
-        mini = Dictionary(build_config=cfg_final)
+        mini = Dictionary(build_config=cfg)
         mini.regex_map = regex_map
         if cand is not None:
             tm: dict[str, set] = {}
             wm: dict[str, set] = {}
-            for row in cand:
-                r = row if isinstance(row, dict) else row.asDict()
+            for r in cand:  # Arrow struct dicts or Rows, both key by name
                 tm.setdefault(r["term"], set()).add(r["cui"])
-                from ..text import tools as T
                 for w in T.get_words(r["term"]):
                     wm.setdefault(w, set()).add(r["term"])
                 if r["cui"] not in mini.concepts:
-                    def arr(x):  # Arrow hands arrays as numpy
-                        return tuple(x) if x is not None else ()
                     mini.concepts[r["cui"]] = ConceptMeta(
                         cui=r["cui"], name=r["name"],
                         synonyms=arr(r["synonyms"]),
                         sem_types=arr(r["sem_types"]),
                         sources=arr(r["sources"]),
-                        terms=tuple(
-                            (t["text"], t["form"]) if isinstance(t, dict)
-                            else (t.text, t.form)
-                            for t in arr(r["cterms"])))
+                        terms=tuple((t["text"], t["form"])
+                                    for t in arr(r["cterms"])))
             mini.term_map = {t: tuple(sorted(s)) for t, s in tm.items()}
             mini.word_map = {w: tuple(sorted(s)) for w, s in wm.items()}
-        match_sentence(out, doc_id, sent_id, text, offset, mini, cfg_final)
+        match_sentence(out, doc_id, sent_id, text, offset, mini, cfg)
 
     return _map_rows(joined, MENTIONS_SCHEMA, lambda: body,
                      cols=("doc_id", "sent_id", "text", "offset", "cand"))

@@ -3,7 +3,8 @@
 Stage architecture (SURVEY.md §7): each stage is a pure DataFrame ->
 DataFrame transform; the heavy lexical work runs inside one narrow
 ``mapInPandas`` (``_map_rows``) over a broadcast dictionary. A document
-row holds every span, so ``document_concepts`` (triples) and
+row holds every span, so ``document_concepts`` (the ``(doc_id, cui)`` of
+triples and of every document-level graph entry) and
 ``document_mentions`` (mentions, ``annotate_document`` per document with
 ConText) need no shuffle; ``run_pipeline``'s only shuffle is the triple
 dedupe. The checkpointed chain persists sentences, so its mentions come
@@ -447,9 +448,10 @@ def isa_triples(spark: SparkSession, dico: Dictionary) -> DataFrame:
 def materialize_triples(mentions: DataFrame, spark: SparkSession,
                         dico: Dictionary, include_isa: bool = True,
                         canonical: DataFrame | None = None) -> DataFrame:
-    """P5+P6: optionally rewrite mention CUIs through the canonical map
-    (connected components over synonym/xref edges, graph.canonicalize)
-    before emitting doc->mentions_concept->CUI and CUI->isa->CUI triples."""
+    """P5+P6: optionally rewrite CUIs through the canonical map (connected
+    components over synonym/xref edges, ``graph.canonicalize``) before
+    emitting doc->mentions_concept->CUI and CUI->isa->CUI triples.
+    ``mentions`` needs only ``doc_id`` and ``cui`` (``document_concepts``)."""
     if canonical is not None:
         from ..graph.canonicalize import canonicalize_mentions
         mentions = canonicalize_mentions(mentions, canonical)
@@ -457,14 +459,9 @@ def materialize_triples(mentions: DataFrame, spark: SparkSession,
     if include_isa and dico.isa_edges:
         isa = isa_triples(spark, dico)
         if canonical is not None:
-            cmap = F.broadcast(canonical)
-            isa = (isa.join(cmap.withColumnRenamed("cui", "subj"), "subj", "left")
-                   .withColumn("subj", F.coalesce("canonical_cui", "subj"))
-                   .drop("canonical_cui")
-                   .join(cmap.withColumnRenamed("cui", "obj"), "obj", "left")
-                   .withColumn("obj", F.coalesce("canonical_cui", "obj"))
-                   .drop("canonical_cui")
-                   .where(F.col("subj") != F.col("obj"))
+            isa = canonicalize_mentions(
+                canonicalize_mentions(isa, canonical, "subj"), canonical, "obj")
+            isa = (isa.where(F.col("subj") != F.col("obj"))
                    .select("subj", "pred", "obj", "doc_id").distinct())
         t = t.unionByName(isa)
     return t

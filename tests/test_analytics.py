@@ -11,7 +11,7 @@ import random
 import pytest
 
 from nobletools_spark.graph.analytics import (concept_cooccurrence_pmi,
-                                              pagerank)
+                                              concept_pairs, pagerank)
 
 
 def _py_pagerank(edges, damping=0.85, iterations=10):
@@ -115,6 +115,18 @@ class TestCooccurrencePMI:
             [("d1", "B"), ("d1", "A")], "doc_id string, cui string")
         rows = concept_cooccurrence_pmi(dc).collect()
         assert [(r.cui_a, r.cui_b) for r in rows] == [("A", "B")]
+
+
+class TestConceptPairs:
+    def test_one_row_per_document_and_pair(self, spark):
+        # a (doc_id, cui) repeated within a document counts once; a pair
+        # shared by two documents gives two rows
+        dc = spark.createDataFrame(
+            [("d1", "B"), ("d1", "A"), ("d1", "A"), ("d2", "A"),
+             ("d2", "B"), ("d2", "C"), ("d3", "C")],
+            "doc_id string, cui string")
+        assert sorted(tuple(r) for r in concept_pairs(dc).collect()) == \
+            [("A", "B"), ("A", "B"), ("A", "C"), ("B", "C")]
 
 
 class TestDegreeStats:

@@ -1,5 +1,7 @@
 """B1 RESULTS.tsv export + B3 triple sink tests."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from nobletools_spark.pipeline.documents import generate_documents
@@ -8,6 +10,8 @@ from nobletools_spark.pipeline.export import (mentions_to_results,
                                               write_triples)
 from nobletools_spark.pipeline.stages import run_pipeline
 from nobletools_spark.terminology.fixture import fixture_dictionary
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_results_tsv_roundtrip(spark, tmp_path):
@@ -51,7 +55,7 @@ def test_pyfiles_zip_importable(tmp_path):
     import sys
     out = str(tmp_path / "nobletools_spark.zip")
     r = subprocess.run([sys.executable, "scripts/package_pyfiles.py", out],
-                       capture_output=True, text=True, cwd="/root/repo")
+                       capture_output=True, text=True, cwd=REPO)
     assert r.returncode == 0, r.stderr
     probe = (
         "import sys; sys.path.insert(0, %r); "
@@ -74,13 +78,11 @@ def test_shipped_zip_has_current_sources(tmp_path, monkeypatch):
     process with a recycled PID would find it) is never shipped; the
     shipped zip holds exactly the package sources as they are now."""
     import importlib.util
-    import os
     import tempfile
     import types
     import zipfile
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_ship", os.path.join(repo, "__spark_entry__.py"))
+        "spark_entry_ship", os.path.join(REPO, "__spark_entry__.py"))
     entry = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry)
 
@@ -94,20 +96,18 @@ def test_shipped_zip_has_current_sources(tmp_path, monkeypatch):
 
     assert len(shipped) == 1
     want = {}
-    for dirpath, _, files in os.walk(os.path.join(repo, "nobletools_spark")):
+    for dirpath, _, files in os.walk(os.path.join(REPO, "nobletools_spark")):
         for f in files:
             if f.endswith(".py"):
                 full = os.path.join(dirpath, f)
                 with open(full, "rb") as fh:
-                    want[os.path.relpath(full, repo)] = fh.read()
+                    want[os.path.relpath(full, REPO)] = fh.read()
     with zipfile.ZipFile(shipped[0]) as zf:
         assert {n: zf.read(n) for n in zf.namelist()} == want
 
 
 def test_html_export_pages_and_index(spark, tmp_path):
     """B2: per-document annotated HTML + index (HTMLExporter analog)."""
-    import os
-
     from nobletools_spark.context.lexicon import modifier_dictionary
     from nobletools_spark.pipeline.export import (document_html,
                                                   write_html_reports)

@@ -12,7 +12,10 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
+    df = spark.read.parquet(f"{SF}/documents.parquet").cache()
+    yield df
+    # a cached scan of the shared corpus would change later tests' plans
+    df.unpersist()
 
 
 class TestIncrementalPairs:

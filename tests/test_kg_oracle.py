@@ -5,11 +5,14 @@ queries value-for-value on the driver corpus — sentences, mentions
 This is the same canonicalization the driver's correctness harness uses.
 """
 
+import os
+
 import duckdb
 import pandas as pd
 import pytest
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def canon(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -35,7 +38,7 @@ def con():
 def entry():
     import importlib.util
     spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py")
+        "spark_entry", os.path.join(REPO, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

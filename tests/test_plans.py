@@ -3,12 +3,15 @@
 cartesian products in scale paths) asserted against `.explain` output so
 refactors can't silently regress them."""
 
+import hashlib
+import os
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def plan_of(df, mode: str = "simple") -> str:
@@ -29,6 +32,29 @@ def lambda_bodies(df) -> list[str]:
             i += 1
         bodies.append(plan[m.end():i - 1])
     return bodies
+
+
+def executed_plans(spark, action):
+    """Run ``action``; return its result and the physical plan (the final
+    one under AQE, formatted: tree, then node details) of every SQL
+    execution it started, eager checkpoints included."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        lst = store.executionsList()
+        return [lst.apply(i) for i in range(lst.size())]
+
+    seen = {e.executionId() for e in executions()}
+    out = action()
+    return out, [e.physicalPlanDescription() for e in executions()
+                 if e.executionId() not in seen]
+
+
+def final_tree(plan: str) -> str:
+    tree = plan.split("\n\n")[0]
+    return tree.split("== Final Plan ==")[-1].split("== Initial Plan ==")[0]
 
 
 def scan_block(df, table: str) -> str:
@@ -124,6 +150,51 @@ class TestKgPipelinePlans:
         plan = plan_of(ann)
         # exactly one repartition (doc_id) buys document-ordered state
         assert plan.count("Exchange") == 1
+
+
+class TestKgEntryPlans:
+    """The document-level KG entries read ``document_concepts``: sorted-row
+    md5 of each entry's rows at sf0.001 (values of the mention-row
+    entries they replaced), and across every execution an entry starts
+    the matcher runs once and no mention column is built."""
+    HASHES = {
+        "kg_triples": "6e3b05134287",
+        "kg_cooccurrence_pmi": "01994ff1b7b8",
+        "kg_components": "7aff646d93ea",
+        "kg_weighted_pagerank": "fca4d27a3abe",
+        "kg_triangle_counts": "35e4763b812f",
+        "kg_degree_stats": "6dfd63173bca",
+        "kg_canonical_triples": "c04aafb58f17",
+    }
+
+    @pytest.fixture(scope="class")
+    def run(self, spark):
+        import importlib.util
+        spec = importlib.util.spec_from_file_location(
+            "spark_entry_plans", os.path.join(REPO, "__spark_entry__.py"))
+        entry = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(entry)
+        done = {}
+
+        def run(name):
+            if name not in done:
+                done[name] = executed_plans(
+                    spark, lambda: entry.queries()[name](spark, SF).collect())
+            return done[name]
+        return run
+
+    @pytest.mark.parametrize("name", sorted(HASHES))
+    def test_rows_unchanged(self, run, name):
+        rows, _ = run(name)
+        got = str(sorted(tuple(r) for r in rows))
+        assert hashlib.md5(got.encode()).hexdigest()[:12] == self.HASHES[name]
+
+    @pytest.mark.parametrize("name", sorted(HASHES))
+    def test_matcher_runs_once_without_mention_rows(self, run, name):
+        _, plans = run(name)
+        for attr in ("matched_term#", "annotations#"):
+            assert not any(attr in p for p in plans), attr
+        assert sum(final_tree(p).count("MapInPandas") for p in plans) == 1
 
 
 class TestScalePathPlans:

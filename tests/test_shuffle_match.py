@@ -36,30 +36,36 @@ def keyset(df):
 
 
 class TestShuffleMatchParity:
-    def test_matches_broadcast_compacted_path(self, spark, tables, sentences):
+    # the shuffle path applies only the compacted overrides to the
+    # caller's search method
+    @pytest.mark.parametrize("method",
+                             ["best-match", "all-match", "partial-match"])
+    def test_matches_broadcast_compacted_path(self, spark, tables, sentences,
+                                              method):
         from nobletools_spark.pipeline.stages import SENTENCES_SCHEMA
         # both paths match the text with DeID tags blanked out
-        deid = spark.createDataFrame(
-            [("deid", 0, "Prose",
-              "Seen by **NAME[melanoma] for follow up of melanoma.", 0, -1)],
-            schema=SENTENCES_SCHEMA)
+        text = "Seen by **NAME[melanoma] for follow up of melanoma."
+        deid = spark.createDataFrame([("deid", 0, "Prose", text, 0, -1)],
+                                     schema=SENTENCES_SCHEMA)
         sentences = sentences.unionByName(deid)
         # broadcast twin: compact WT table, no blacklist shortcut
         dico = dictionary_from_tables(tables)
         dico.word_map = {r.word: tuple(r.terms)
                          for r in tables["word_index_compact"].collect()}
         dico.blacklist = {}
-        cfg = for_search_method("best-match", compacted=True)
+        cfg = for_search_method(method, compacted=True)
         broadcast_out = detect_mentions(
             sentences, spark.sparkContext.broadcast(dico), cfg)
 
         shuffle_out = detect_mentions_shuffle(
-            sentences, tables, for_search_method("best-match"),
-            base_dico=dico)
+            sentences, tables, for_search_method(method), base_dico=dico)
         assert keyset(shuffle_out) == keyset(broadcast_out)
         assert shuffle_out.count() > 0
-        assert [r.cui for r in shuffle_out.where("doc_id = 'deid'")
-                .collect()] == ["C0025202"]
+        deid_rows = shuffle_out.where("doc_id = 'deid'").collect()
+        # only the untagged "melanoma" is matched
+        assert {r.start for r in deid_rows} == {text.rindex("melanoma")}
+        if method == "best-match":
+            assert [r.cui for r in deid_rows] == ["C0025202"]
 
     def test_empty_sentence_safe(self, spark, tables):
         from pyspark.sql import types as ST
