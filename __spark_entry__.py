@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nobletools_spark.pipeline.documents import interleave_flat_documents
@@ -187,26 +187,27 @@ def _kg_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-derived KG enrichment: PMI-weighted concept co-occurrence
-    edges over the documents' concepts (two bounded shuffles; see
-    graph/analytics.py::concept_cooccurrence_pmi)."""
+    edges over the documents' concepts (two bounded shuffles, input read
+    once; see graph/analytics.py::concept_cooccurrence_pmi)."""
     from nobletools_spark.graph.analytics import concept_cooccurrence_pmi
-    # the pairs, document frequencies and corpus size each read the
-    # concepts — materialize once or the matcher replays per reference
-    dc = _kg_concepts(spark, sf_dir).localCheckpoint(eager=True)
-    return concept_cooccurrence_pmi(dc).orderBy("cui_a", "cui_b")
+    return (concept_cooccurrence_pmi(_kg_concepts(spark, sf_dir))
+            .orderBy("cui_a", "cui_b"))
 
 
 def _kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the co-occurrence graph, singleton
     concepts included (graph/analytics.py::connected_components — the
-    hybrid union-find / min-label engine)."""
-    from nobletools_spark.graph.analytics import (concept_pairs,
-                                                  connected_components)
-    # the concepts feed both the edges and the vertex frame — materialize
-    # once or the matcher replays per reference
-    dc = _kg_concepts(spark, sf_dir).localCheckpoint(eager=True)
-    return connected_components(concept_pairs(dc).distinct(),
-                                vertices=dc.select("cui")).orderBy("cui")
+    hybrid union-find / min-label engine). Star edges, O(k) per document
+    of k concepts: each concept links to its document's minimum concept,
+    and a null-``doc_id`` concept to itself."""
+    from nobletools_spark.graph.analytics import connected_components
+    dc = _kg_concepts(spark, sf_dir)
+    hub = (F.when(F.col("doc_id").isNotNull(),
+                  F.min("cui").over(Window.partitionBy("doc_id")))
+           .otherwise(F.col("cui")))
+    return (connected_components(dc.select(hub.alias("a"),
+                                           F.col("cui").alias("b")))
+            .orderBy("cui"))
 
 
 def _kg_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -217,11 +218,9 @@ def _kg_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (concept_pairs(_kg_concepts(spark, sf_dir))
              .groupBy("a", "b")
              .agg(F.count(F.lit(1)).cast("double").alias("w")))
-    pairs = pairs.localCheckpoint(eager=True)  # referenced twice below
-    edges = (pairs.select(F.col("a").alias("src"),
-                          F.col("b").alias("dst"), "w")
-             .unionByName(pairs.select(F.col("b").alias("src"),
-                                       F.col("a").alias("dst"), "w")))
+    edges = pairs.select(F.inline(F.array(
+        F.struct(F.col("a").alias("src"), F.col("b").alias("dst"), "w"),
+        F.struct(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))))
     return pagerank(edges, weight_col="w").orderBy("cui")
 
 
@@ -231,8 +230,8 @@ def _kg_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure join, skew handled like the pair count)."""
     from nobletools_spark.graph.analytics import (concept_pairs,
                                                   triangle_counts)
-    edges = concept_pairs(_kg_concepts(spark, sf_dir)).distinct()
-    return triangle_counts(edges).orderBy("cui")
+    return (triangle_counts(concept_pairs(_kg_concepts(spark, sf_dir)))
+            .orderBy("cui"))
 
 
 def _kg_instances(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,6 +9,11 @@ co-occurrence edges that augment the isa graph with corpus-derived
 relatedness (the classic KG-construction enrichment step).
 
 Scale posture:
+- Every operator reads its input once: in one pass (``concept_pairs``,
+  ``degree_stats``) or by materializing its small, projected input at its
+  start with an eager ``localCheckpoint``. The operator that references
+  its input several times owns that decision, so a lazy upstream
+  (``document_concepts``) runs once whatever exchange reuse allows.
 - ``pagerank`` is the join-based fixed-iteration form: each iteration is one
   shuffle on ``dst`` (the contribution aggregation) plus a broadcast-sized
   join against out-degrees; the dangling-mass scalar stays IN-PLAN via a
@@ -16,11 +21,10 @@ Scale posture:
   nothing collects to the driver. An eager ``localCheckpoint`` per iteration
   truncates lineage — without it iteration k replays all k-1 prior joins
   (the same guard ``bpe_train_distributed`` uses).
-- ``concept_pairs`` is the one co-occurrence self-join (PMI, and the
-  weighted PageRank, component and triangle entries over
-  ``document_concepts``): one shuffle on ``doc_id``; the per-document pair
-  explosion is bounded by (distinct concepts per doc)^2, small and
-  independent of corpus size. PMI's document frequencies are
+- ``concept_pairs`` (PMI, and the weighted PageRank and triangle entries
+  over ``document_concepts``) collects each document's CUI set in one
+  shuffle on ``doc_id`` and explodes the pairs from it, bounded by
+  (distinct concepts per doc)^2. PMI's document frequencies are
   vocabulary-bounded and the corpus size rides the plan as a single-row
   cross join, so the whole query is two shuffles at any corpus scale.
 """
@@ -57,10 +61,11 @@ def pagerank(edges: DataFrame, damping: float = 0.85, iterations: int = 10,
     edges = edges.select(*cols).distinct()
     if weight_col is None:
         edges = edges.withColumn("w", F.lit(1.0))
+    # vertices, out-degrees and each dangling mass read the edges
+    edges = edges.localCheckpoint(eager=True)
     vertices = (edges.select(F.col("src").alias("cui"))
                 .union(edges.select(F.col("dst").alias("cui")))
-                .distinct())
-    vertices = vertices.localCheckpoint(eager=True)
+                .distinct().localCheckpoint(eager=True))
     n_df = vertices.agg(F.count(F.lit(1)).cast("double").alias("n"))
     outdeg = edges.groupBy("src").agg(F.sum("w").alias("outdeg"))
     # contribution weight per edge is static across iterations — precompute
@@ -96,26 +101,23 @@ def pagerank(edges: DataFrame, damping: float = 0.85, iterations: int = 10,
 
 def degree_stats(edges: DataFrame) -> DataFrame:
     """Per-vertex degree summary over a directed edge table ``(src, dst)``:
-    out-degree, in-degree, total. One shuffle per direction (both are
-    map-side partial-aggregated), then a vertex-keyed outer merge — the
-    KG health-check surface (hub concepts, leaf counts, skew candidates
-    for the salting knob)."""
+    out-degree, in-degree, total; a repeated edge counts once. One pass:
+    each distinct edge emits ``(src, out=1, in=0)`` and ``(dst, out=0,
+    in=1)``, and one ``groupBy(cui)`` sums them (map-side
+    partial-aggregated) — the KG health-check surface (hub concepts, leaf
+    counts, skew candidates for the salting knob)."""
     e = edges.select(F.col("src").cast("string").alias("src"),
                      F.col("dst").cast("string").alias("dst")).distinct()
-    outd = e.groupBy(F.col("src").alias("cui")).agg(
-        F.count(F.lit(1)).alias("out_degree"))
-    ind = e.groupBy(F.col("dst").alias("cui")).agg(
-        F.count(F.lit(1)).alias("in_degree"))
-    return (outd.join(ind, "cui", "full_outer")
-            .select("cui",
-                    F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-                    F.coalesce("in_degree", F.lit(0)).alias("in_degree"))
+    ends = e.selectExpr(
+        "inline(array(named_struct('cui', src, 'o', 1, 'i', 0),"
+        " named_struct('cui', dst, 'o', 0, 'i', 1)))")
+    return (ends.groupBy("cui").agg(F.sum("o").alias("out_degree"),
+                                    F.sum("i").alias("in_degree"))
             .withColumn("degree",
                         (F.col("out_degree") + F.col("in_degree"))))
 
 
-def connected_components(edges: DataFrame,
-                         vertices: DataFrame | None = None) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """``(a, b)`` undirected edges -> ``(cui, component)`` with the
     component labeled by its minimum member — the public graph surface
     over the hybrid engine `textdata/dedup.py::candidate_components`
@@ -124,22 +126,16 @@ def connected_components(edges: DataFrame,
     engine labels `graph/canonicalize.py::canonical_map` and the near-dup
     groups of `textdata/dedup.py`.
 
-    ``vertices`` (one ``cui`` column) adds isolated vertices as their own
-    singleton components — edge lists alone cannot name them.
+    An edge ``(v, v)`` names an isolated vertex ``v``, a singleton
+    component. The call is eager: the distinct edges are materialized once
+    before the engine caches and counts them.
     """
     from ..textdata.dedup import candidate_components
-    comp = candidate_components(
-        edges.select(F.col("a").cast("string").alias("a"),
-                     F.col("b").cast("string").alias("b")))
-    out = comp.select(F.col("doc_id").alias("cui"),
-                      F.col("comp").alias("component"))
-    if vertices is not None:
-        singles = (vertices.select(F.col("cui").cast("string").alias("cui"))
-                   .distinct()
-                   .join(out, "cui", "left_anti")
-                   .select("cui", F.col("cui").alias("component")))
-        out = out.unionByName(singles)
-    return out
+    e = (edges.select(F.col("a").cast("string").alias("a"),
+                      F.col("b").cast("string").alias("b"))
+         .distinct().localCheckpoint(eager=True))
+    return candidate_components(e).select(F.col("doc_id").alias("cui"),
+                                          F.col("comp").alias("component"))
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -158,9 +154,8 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     e = (edges.select(F.col("a").cast("string").alias("a"),
                       F.col("b").cast("string").alias("b"))
          .where(F.col("a") < F.col("b")).distinct())
-    # e is referenced five times (two wedge sides, the closure probe, both
-    # vertex projections) and tri three times — materialize each once or
-    # the whole upstream (here: the mention pipeline) replays per reference
+    # e is read five times (two wedge sides, the closure probe, both
+    # vertex projections) and tri three times: materialize each once
     e = e.localCheckpoint(eager=True)
     verts = (e.select(F.col("a").alias("cui"))
              .union(e.select(F.col("b").alias("cui"))).distinct())
@@ -182,13 +177,14 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
 def concept_pairs(doc_concepts: DataFrame) -> DataFrame:
     """``(doc_id, cui)`` rows -> ``(a, b)``: one row per document and
     unordered concept pair co-occurring in it, with ``a < b``. Repeated
-    ``(doc_id, cui)`` rows count once. Count the rows for co-occurrence
-    weights; take ``distinct()`` for the edge set."""
-    dc = doc_concepts.select("doc_id", "cui").distinct()
-    return (dc.select("doc_id", F.col("cui").alias("a"))
-            .join(dc.select("doc_id", F.col("cui").alias("b")), "doc_id")
-            .where(F.col("a") < F.col("b"))
-            .select("a", "b"))
+    ``(doc_id, cui)`` rows count once; a null ``doc_id`` pairs nothing.
+    Count the rows for co-occurrence weights; take ``distinct()`` for the
+    edge set."""
+    docs = (doc_concepts.where(F.col("doc_id").isNotNull())
+            .groupBy("doc_id").agg(F.collect_set("cui").alias("cuis")))
+    return (docs.select(F.explode("cuis").alias("a"), "cuis")
+            .select("a", F.explode(F.filter(
+                "cuis", lambda b: b > F.col("a"))).alias("b")))
 
 
 def concept_cooccurrence_pmi(doc_concepts: DataFrame,
@@ -202,14 +198,15 @@ def concept_cooccurrence_pmi(doc_concepts: DataFrame,
     with N = number of distinct documents carrying at least one concept and
     n_x = document frequency. Output ``(cui_a, cui_b, n_docs, pmi)``.
 
-    Plan: distinct (doc_id, cui) -> ``concept_pairs`` (one shuffle; the
-    per-doc explosion is bounded by the per-doc concept count) -> pair
-    counts (second shuffle) -> broadcast doc-frequency joins (the concept
-    vocabulary is dictionary-bounded) with N as an in-plan scalar.
+    The call is eager: the pairs, the document frequencies and N all read
+    the distinct ``(doc_id, cui)`` rows, so they are materialized once.
+    Plan: ``concept_pairs`` (one shuffle) -> pair counts (second shuffle)
+    -> broadcast doc-frequency joins (the concept vocabulary is
+    dictionary-bounded) with N as an in-plan scalar.
     """
     dc = (doc_concepts.select(F.col("doc_id").cast("string").alias("doc_id"),
                               F.col("cui").cast("string").alias("cui"))
-          .distinct())
+          .distinct().localCheckpoint(eager=True))
     n_df = dc.agg(F.countDistinct("doc_id").cast("double").alias("n_corpus"))
     df_freq = dc.groupBy("cui").agg(
         F.count(F.lit(1)).cast("double").alias("df"))
@@ -217,10 +214,8 @@ def concept_cooccurrence_pmi(doc_concepts: DataFrame,
              .groupBy(F.col("a").alias("cui_a"), F.col("b").alias("cui_b"))
              .agg(F.count(F.lit(1)).alias("n_docs")))
     return (pairs
-            .join(F.broadcast(df_freq.withColumnRenamed("cui", "cui_a")
-                              .withColumnRenamed("df", "df_a")), "cui_a")
-            .join(F.broadcast(df_freq.withColumnRenamed("cui", "cui_b")
-                              .withColumnRenamed("df", "df_b")), "cui_b")
+            .join(F.broadcast(df_freq.toDF("cui_a", "df_a")), "cui_a")
+            .join(F.broadcast(df_freq.toDF("cui_b", "df_b")), "cui_b")
             .crossJoin(n_df)
             .select("cui_a", "cui_b", F.col("n_docs").cast("long")
                     .alias("n_docs"),

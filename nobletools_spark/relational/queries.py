@@ -643,15 +643,17 @@ def embedding_cosine_topk(spark, sf):
     probe = e.where(F.col("vec_id") == 0).select("embedding").head()[0]
     plit = F.array(*[F.lit(float(x)) for x in probe])
     vec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(vec, plit, lambda a, b: a * b),
+    dot = F.aggregate(F.zip_with("_v", plit, lambda a, b: a * b),
                       F.lit(0.0), lambda acc, x: acc + x)
-    nrm = F.sqrt(F.aggregate(F.zip_with(vec, vec, lambda a, b: a * b),
+    nrm = F.sqrt(F.aggregate(F.zip_with("_v", "_v", lambda a, b: a * b),
                              F.lit(0.0), lambda acc, x: acc + x))
     pn = float(sum(float(x) * float(x) for x in probe)) ** 0.5
     # _spread: the one-split parquet corpus would run the interpreted
     # HOF dot products on a single task; TakeOrdered then merges the
-    # per-partition top-10s, so the scan parallelizes cleanly
+    # per-partition top-10s, so the scan parallelizes cleanly. The cast
+    # vector is projected once: dot and norm name it three times.
     return (_spread(spark, e.where(F.col("vec_id") != 0))
+            .select("vec_id", "label", vec.alias("_v"))
             .select("vec_id", "label",
                     F.round(dot / (nrm * F.lit(pn)), 4).alias("cosine"))
             .orderBy(F.desc("cosine"), "vec_id").limit(10))

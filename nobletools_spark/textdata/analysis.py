@@ -145,24 +145,27 @@ def c4_filters(df: DataFrame, text_col: str = "text",
     adapted to the corpus shape: word-count bounds, a mean-word-length
     band, and stop-word presence (C4's English heuristic). Emits the
     per-rule booleans plus the composite ``keep`` so downstream jobs can
-    audit drop reasons; pure column expressions end to end."""
+    audit drop reasons; pure column expressions end to end. As in
+    ``repetition_stats``, the tokens and each statistic are materialized
+    in a projection, or every rule naming one re-evaluates it per row."""
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    n = F.size(toks)
-    mean_len = F.round(
-        F.aggregate(toks, F.lit(0).cast("long"),
-                    lambda a, x: a + F.length(x)) / n, 4)
-    has_stop = F.exists(toks, lambda t: t.isin(
-        "the", "a", "an", "and", "or", "of", "to", "in", "is", "was"))
+    stats = (df.where(F.length(F.trim(F.col(text_col))) > 0)
+             .select("doc_id", toks.alias("_t"))
+             .select("doc_id", F.size("_t").cast("long").alias("n_words"),
+                     F.round(F.aggregate("_t", F.lit(0).cast("long"),
+                                         lambda a, x: a + F.length(x))
+                             / F.size("_t"), 4).alias("mean_word_len"),
+                     F.exists("_t", lambda t: t.isin(
+                         "the", "a", "an", "and", "or", "of", "to", "in",
+                         "is", "was")).alias("has_stop_word")))
+    n, m = F.col("n_words"), F.col("mean_word_len")
     ok_words = (n >= min_words) & (n <= max_words)
-    ok_len = (mean_len >= mean_len_lo) & (mean_len <= mean_len_hi)
-    return (df.where(F.length(F.trim(F.col(text_col))) > 0)
-            .select("doc_id",
-                    n.cast("long").alias("n_words"),
-                    mean_len.alias("mean_word_len"),
-                    ok_words.alias("ok_word_count"),
-                    ok_len.alias("ok_mean_len"),
-                    has_stop.alias("has_stop_word"),
-                    (ok_words & ok_len & has_stop).alias("keep")))
+    ok_len = (m >= mean_len_lo) & (m <= mean_len_hi)
+    return stats.select("doc_id", "n_words", "mean_word_len",
+                        ok_words.alias("ok_word_count"),
+                        ok_len.alias("ok_mean_len"), "has_stop_word",
+                        (ok_words & ok_len & F.col("has_stop_word"))
+                        .alias("keep"))
 
 
 # ------------------------------------------------------------------- PII --

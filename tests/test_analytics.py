@@ -120,10 +120,11 @@ class TestCooccurrencePMI:
 class TestConceptPairs:
     def test_one_row_per_document_and_pair(self, spark):
         # a (doc_id, cui) repeated within a document counts once; a pair
-        # shared by two documents gives two rows
+        # shared by two documents gives two rows; a null doc_id row pairs
+        # with nothing
         dc = spark.createDataFrame(
             [("d1", "B"), ("d1", "A"), ("d1", "A"), ("d2", "A"),
-             ("d2", "B"), ("d2", "C"), ("d3", "C")],
+             ("d2", "B"), ("d2", "C"), ("d3", "C"), (None, "A")],
             "doc_id string, cui string")
         assert sorted(tuple(r) for r in concept_pairs(dc).collect()) == \
             [("A", "B"), ("A", "B"), ("A", "C"), ("B", "C")]
@@ -247,12 +248,12 @@ class TestWeightedPageRank:
 class TestConnectedComponents:
     def test_components_and_singletons(self, spark):
         from nobletools_spark.graph.analytics import connected_components
+        # an edge (v, v) names an isolated vertex
         e = spark.createDataFrame(
-            [("b", "a"), ("b", "c"), ("x", "y")], "a string, b string")
-        v = spark.createDataFrame([("a",), ("b",), ("c",), ("x",), ("y",),
-                                   ("lone",)], "cui string")
+            [("b", "a"), ("b", "c"), ("x", "y"), ("lone", "lone")],
+            "a string, b string")
         got = {r.cui: r.component
-               for r in connected_components(e, vertices=v).collect()}
+               for r in connected_components(e).collect()}
         assert got == {"a": "a", "b": "a", "c": "a",
                        "x": "x", "y": "x", "lone": "lone"}
 
@@ -274,8 +275,8 @@ class TestConnectedComponents:
                 lo, hi = sorted((ra, rb))
                 parent[hi] = lo
         want = {v: find(v) for v in verts}
-        e = spark.createDataFrame(edges, "a string, b string")
-        v = spark.createDataFrame([(x,) for x in verts], "cui string")
+        e = spark.createDataFrame(edges + [(x, x) for x in verts],
+                                  "a string, b string")
         got = {r.cui: r.component
-               for r in connected_components(e, vertices=v).collect()}
+               for r in connected_components(e).collect()}
         assert got == want

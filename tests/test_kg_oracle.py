@@ -98,3 +98,27 @@ def test_window_composition(entry):
     assert len(oracle) == len(names)  # every query has an oracle
     assert all(n in oracle for n in names)
     assert names[:50] == DRIVER_WINDOW
+
+
+def test_component_star_edges_equal_pairs_and_vertices(spark, entry,
+                                                       monkeypatch):
+    """``kg_components`` links each concept to its document's minimum
+    concept: the same components as every co-occurring pair plus every
+    concept as a vertex, on a repeated pair, a one-concept document and
+    null-``doc_id`` rows."""
+    from pyspark.sql import functions as F
+
+    from nobletools_spark.graph.analytics import (concept_pairs,
+                                                  connected_components)
+    dc = spark.createDataFrame(
+        [("d1", "C"), ("d1", "A"), ("d1", "B"), ("d2", "A"), ("d2", "B"),
+         ("d3", "D"), ("d4", "E"), ("d4", "F"), (None, "G"), (None, "E")],
+        "doc_id string, cui string")
+    monkeypatch.setattr(entry, "_kg_concepts", lambda spark, sf_dir: dc)
+    got = {tuple(r) for r in entry.queries()["kg_components"](
+        spark, SF).collect()}
+    edges = concept_pairs(dc).distinct().unionByName(
+        dc.select(F.col("cui").alias("a"), F.col("cui").alias("b")))
+    assert got == {tuple(r) for r in connected_components(edges).collect()}
+    assert got == {("A", "A"), ("B", "A"), ("C", "A"), ("D", "D"),
+                   ("E", "E"), ("F", "E"), ("G", "G")}

@@ -156,7 +156,9 @@ class TestKgEntryPlans:
     """The document-level KG entries read ``document_concepts``: sorted-row
     md5 of each entry's rows at sf0.001 (values of the mention-row
     entries they replaced), and across every execution an entry starts
-    the matcher runs once and no mention column is built."""
+    the matcher runs once and no mention column is built — also with a
+    cached documents scan in the session, which defeats exchange reuse
+    between an operator's references to its input."""
     HASHES = {
         "kg_triples": "6e3b05134287",
         "kg_cooccurrence_pmi": "01994ff1b7b8",
@@ -168,33 +170,68 @@ class TestKgEntryPlans:
     }
 
     @pytest.fixture(scope="class")
-    def run(self, spark):
+    def entry(self):
         import importlib.util
         spec = importlib.util.spec_from_file_location(
             "spark_entry_plans", os.path.join(REPO, "__spark_entry__.py"))
         entry = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(entry)
-        done = {}
+        return entry
 
-        def run(name):
-            if name not in done:
-                done[name] = executed_plans(
+    @pytest.fixture(scope="class")
+    def run(self, spark, entry):
+        done, scans = {}, []
+
+        def run(name, cached=False):
+            if cached and not scans:
+                scans.append(spark.read.parquet(
+                    f"{SF}/documents.parquet").cache())
+                scans[0].count()
+            if (name, cached) not in done:
+                done[name, cached] = executed_plans(
                     spark, lambda: entry.queries()[name](spark, SF).collect())
-            return done[name]
-        return run
+            return done[name, cached]
+        yield run
+        for scan in scans:
+            scan.unpersist()
+
+    @staticmethod
+    def digest(rows):
+        got = str(sorted(tuple(r) for r in rows))
+        return hashlib.md5(got.encode()).hexdigest()[:12]
+
+    @staticmethod
+    def matcher_runs(plans):
+        for attr in ("matched_term#", "annotations#"):
+            assert not any(attr in p for p in plans), attr
+        return sum(final_tree(p).count("MapInPandas") for p in plans)
 
     @pytest.mark.parametrize("name", sorted(HASHES))
     def test_rows_unchanged(self, run, name):
         rows, _ = run(name)
-        got = str(sorted(tuple(r) for r in rows))
-        assert hashlib.md5(got.encode()).hexdigest()[:12] == self.HASHES[name]
+        assert self.digest(rows) == self.HASHES[name]
 
     @pytest.mark.parametrize("name", sorted(HASHES))
     def test_matcher_runs_once_without_mention_rows(self, run, name):
         _, plans = run(name)
-        for attr in ("matched_term#", "annotations#"):
-            assert not any(attr in p for p in plans), attr
-        assert sum(final_tree(p).count("MapInPandas") for p in plans) == 1
+        assert self.matcher_runs(plans) == 1
+
+    @pytest.mark.parametrize("name", sorted(HASHES))
+    def test_matcher_runs_once_with_cached_scan(self, run, name):
+        rows, plans = run(name, cached=True)
+        assert self.matcher_runs(plans) == 1
+        assert self.digest(rows) == self.HASHES[name]
+
+    def test_lazy_pmi_input_planned_once(self, spark, entry):
+        # the pairs, document frequencies and corpus size all read the
+        # input; the operator, not its caller, materializes it once
+        from nobletools_spark.graph.analytics import concept_cooccurrence_pmi
+        from nobletools_spark.pipeline.stages import document_concepts
+        dc = document_concepts(entry._load_documents(spark, SF),
+                               spark.sparkContext.broadcast(entry._dico()))
+        _, plans = executed_plans(
+            spark, lambda: concept_cooccurrence_pmi(dc).collect())
+        assert self.matcher_runs(plans) == 1
 
 
 class TestScalePathPlans:
@@ -244,6 +281,18 @@ class TestScalePathPlans:
         bodies = lambda_bodies(build_blacklist_df(index, stats, 10_000))
         assert bodies
         assert not [b for b in bodies if "CASE WHEN" in b]
+
+    def test_inline_arrays_evaluated_once_per_row(self, spark):
+        # an expression that several output columns name is evaluated once
+        # per name unless a projection materializes it first: C4's
+        # token-length sum, and the cosine query's double-cast vector
+        from nobletools_spark.relational.queries import QUERIES
+        from nobletools_spark.textdata.analysis import c4_filters
+        d = spark.read.parquet(f"{SF}/documents.parquet")
+        c4 = lambda_bodies(c4_filters(d))
+        assert len([b for b in c4 if "length(lambda" in b]) == 1
+        cos = lambda_bodies(QUERIES["embedding_cosine_topk"].spark(spark, SF))
+        assert len([b for b in cos if b.startswith("cast(lambda")]) == 1
 
     def test_line_dedup_cross_doc_test_is_partial_aggregated(self, spark):
         # the ">=2 distinct docs" test must be a groupBy on the line hash
