@@ -11,8 +11,7 @@ relatedness (the classic KG-construction enrichment step).
 Scale posture:
 - Every operator reads its input once: in one pass (``concept_pairs``,
   ``degree_stats``) or by materializing its small, projected input at its
-  start with an eager ``localCheckpoint``. The operator that references
-  its input several times owns that decision, so a lazy upstream
+  start with an eager ``localCheckpoint``, so a lazy upstream
   (``document_concepts``) runs once whatever exchange reuse allows.
 - ``pagerank`` is the join-based fixed-iteration form: each iteration is one
   shuffle on ``dst`` (the contribution aggregation) plus a broadcast-sized
@@ -108,13 +107,13 @@ def degree_stats(edges: DataFrame) -> DataFrame:
     counts, skew candidates for the salting knob)."""
     e = edges.select(F.col("src").cast("string").alias("src"),
                      F.col("dst").cast("string").alias("dst")).distinct()
-    ends = e.selectExpr(
-        "inline(array(named_struct('cui', src, 'o', 1, 'i', 0),"
-        " named_struct('cui', dst, 'o', 0, 'i', 1)))")
+    one, zero = F.lit(1), F.lit(0)
+    ends = e.select(F.inline(F.array(
+        F.struct(F.col("src").alias("cui"), one.alias("o"), zero.alias("i")),
+        F.struct(F.col("dst").alias("cui"), zero.alias("o"), one.alias("i")))))
     return (ends.groupBy("cui").agg(F.sum("o").alias("out_degree"),
                                     F.sum("i").alias("in_degree"))
-            .withColumn("degree",
-                        (F.col("out_degree") + F.col("in_degree"))))
+            .withColumn("degree", F.col("out_degree") + F.col("in_degree")))
 
 
 def connected_components(edges: DataFrame) -> DataFrame:
@@ -127,8 +126,9 @@ def connected_components(edges: DataFrame) -> DataFrame:
     groups of `textdata/dedup.py`.
 
     An edge ``(v, v)`` names an isolated vertex ``v``, a singleton
-    component. The call is eager: the distinct edges are materialized once
-    before the engine caches and counts them.
+    component. The call is eager. Its ``localCheckpoint`` of the distinct
+    edges costs a job and an edge copy beyond the engine's ``cache``: it
+    keeps the input's lineage out of plans the matcher-count guards read.
     """
     from ..textdata.dedup import candidate_components
     e = (edges.select(F.col("a").cast("string").alias("a"),

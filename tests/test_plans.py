@@ -180,20 +180,24 @@ class TestKgEntryPlans:
 
     @pytest.fixture(scope="class")
     def run(self, spark, entry):
-        done, scans = {}, []
+        done = {}
 
         def run(name, cached=False):
-            if cached and not scans:
-                scans.append(spark.read.parquet(
-                    f"{SF}/documents.parquet").cache())
-                scans[0].count()
+            # the scan is cached for one cached run only, so every case
+            # runs in the state its name gives whatever the test order
             if (name, cached) not in done:
-                done[name, cached] = executed_plans(
-                    spark, lambda: entry.queries()[name](spark, SF).collect())
+                scan = spark.read.parquet(f"{SF}/documents.parquet")
+                if cached:
+                    scan.cache().count()
+                try:
+                    done[name, cached] = executed_plans(
+                        spark,
+                        lambda: entry.queries()[name](spark, SF).collect())
+                finally:
+                    if cached:
+                        scan.unpersist(blocking=True)
             return done[name, cached]
-        yield run
-        for scan in scans:
-            scan.unpersist()
+        return run
 
     @staticmethod
     def digest(rows):
