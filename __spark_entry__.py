@@ -170,9 +170,10 @@ def _kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concept importance over the isa graph: join-based fixed-iteration
     PageRank (graph/analytics.py), dangling mass in-plan, lineage
     truncated per iteration."""
+    from nobletools_spark.frames import local_frame
     from nobletools_spark.graph.analytics import pagerank
-    edges = spark.createDataFrame(sorted(_dico().isa_edges),
-                                  "src string, dst string")
+    edges = local_frame(spark, sorted(_dico().isa_edges),
+                        "src string, dst string")
     return pagerank(edges).orderBy("cui")
 
 

@@ -6,6 +6,11 @@ __version__ = "0.1.0"
 
 # primary library surface; heavier subsystems import from their modules
 from .config import SearchConfig, for_search_method  # noqa: F401
+from .worker_imports import install as _install_worker_imports
+
+# a no-op in the driver; in a PySpark worker it stops the re-read of every
+# zip directory at each task start (worker_imports.py)
+_install_worker_imports()
 
 
 def __getattr__(name):

@@ -11,7 +11,8 @@ relatedness (the classic KG-construction enrichment step).
 Scale posture:
 - Every operator reads its input once: in one pass (``concept_pairs``,
   ``degree_stats``) or by materializing its small, projected input at its
-  start with an eager ``localCheckpoint``, so a lazy upstream
+  start (an eager ``localCheckpoint``; ``connected_components`` through
+  the component engine's ``cache``), so a lazy upstream
   (``document_concepts``) runs once whatever exchange reuse allows.
 - ``pagerank`` is the join-based fixed-iteration form: each iteration is one
   shuffle on ``dst`` (the contribution aggregation) plus a broadcast-sized
@@ -126,14 +127,12 @@ def connected_components(edges: DataFrame) -> DataFrame:
     groups of `textdata/dedup.py`.
 
     An edge ``(v, v)`` names an isolated vertex ``v``, a singleton
-    component. The call is eager. Its ``localCheckpoint`` of the distinct
-    edges costs a job and an edge copy beyond the engine's ``cache``: it
-    keeps the input's lineage out of plans the matcher-count guards read.
+    component. The call is eager: the engine caches and counts the
+    distinct edges, its one read of the input.
     """
     from ..textdata.dedup import candidate_components
-    e = (edges.select(F.col("a").cast("string").alias("a"),
-                      F.col("b").cast("string").alias("b"))
-         .distinct().localCheckpoint(eager=True))
+    e = edges.select(F.col("a").cast("string").alias("a"),
+                     F.col("b").cast("string").alias("b")).distinct()
     return candidate_components(e).select(F.col("doc_id").alias("cui"),
                                           F.col("comp").alias("component"))
 

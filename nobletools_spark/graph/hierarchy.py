@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 MAX_PATH_DEPTH = 7   # PathHelper.java:31
 MAX_PATH_COUNT = 10
 
@@ -117,6 +119,5 @@ def paths_to_root(isa_edges: DataFrame, roots: DataFrame | None = None,
 
 def isa_edges_df(spark, dico) -> DataFrame:
     """Terminology isa edges -> DataFrame (child_cui, parent_cui)."""
-    return spark.createDataFrame(
-        [(c, p) for c, p in dico.isa_edges],
-        schema="child_cui string, parent_cui string")
+    return local_frame(spark, dico.isa_edges,
+                       "child_cui string, parent_cui string")

@@ -16,7 +16,16 @@ Scale posture:
   (BlacklistHandler.java) is defused the same way here (pre-pruned posting
   lists) plus optional salted repartition (``salt_documents``) so hot
   documents spread over all partitions;
-- `spark.sql.adaptive.enabled` is assumed on for runtime skew re-splits.
+- `spark.sql.adaptive.enabled` is assumed on for runtime skew re-splits;
+- every Python task pays a fixed cost before it reads a row, so a small
+  pass is bound by its task count, not its data. Two rules keep that cost
+  down: a worker that imported this package keeps its zip directories
+  across task starts (``worker_imports.py``, which cuts that cost from
+  about 150 to 30 ms of worker CPU per task on CPython 3.11), and a
+  driver-local frame (the isa triples, a union-find result, a concept
+  list) is an Arrow table (``frames.local_frame``, a JVM-side
+  ``LocalTableScan``), never a pickled RDD, whose job runs in a second
+  Python worker pool that never imports this package.
 """
 
 from __future__ import annotations
@@ -34,6 +43,7 @@ from pyspark.sql import types as ST
 from ..config import SearchConfig, for_search_method
 from ..context.acronyms import AcronymState
 from ..context.context import ConTextEngine, ModifierOut, _add_modifier
+from ..frames import local_frame
 from ..matcher.core import process_sentence
 from ..sentence import splitter as SP
 from ..terminology.storage import Dictionary
@@ -441,8 +451,8 @@ def mention_triples(mentions: DataFrame) -> DataFrame:
 
 def isa_triples(spark: SparkSession, dico: Dictionary) -> DataFrame:
     """P6b: CUI -isa-> CUI from the terminology's BROADER edges."""
-    rows = [(c, "isa", p, "") for c, p in dico.isa_edges]
-    return spark.createDataFrame(rows, schema=TRIPLES_SCHEMA)
+    return local_frame(spark, [(c, "isa", p, "") for c, p in dico.isa_edges],
+                       TRIPLES_SCHEMA)
 
 
 def materialize_triples(mentions: DataFrame, spark: SparkSession,

@@ -34,6 +34,7 @@ from pyspark.sql import types as ST
 from pyspark.sql.window import Window
 
 from ..config import SearchConfig
+from ..frames import local_frame
 from ..text import tools as T
 from .storage import (BLACKLIST_CUTOFF, BLACKLIST_MIN_TERMS,
                       BLACKLIST_TOP_CUTOFF, ConceptMeta, Dictionary,
@@ -74,7 +75,7 @@ def concepts_df(spark: SparkSession, concepts: list[dict | ConceptMeta]) -> Data
                          [(t[0], t[1]) for t in c.get("terms", ())],
                          list(c.get("definitions", ())),
                          list(dict(c.get("codes", {})).items())))
-    return spark.createDataFrame(rows, schema=CONCEPTS_SCHEMA)
+    return local_frame(spark, rows, CONCEPTS_SCHEMA)
 
 
 def apply_term_filter(concepts: DataFrame) -> DataFrame:

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as ST
 
+from ..frames import local_frame
+
 DEFAULT_SHINGLE_N = 3
 DEFAULT_NUM_HASHES = 64
 DEFAULT_BANDS = 16          # 16 bands x 4 rows: catches J>=~0.7 w.h.p.
@@ -255,8 +257,8 @@ def candidate_components(pairs: DataFrame, max_rounds: int = 15,
         spark = pairs.sparkSession
         schema = pairs.schema
         pairs.unpersist()  # fully consumed by count + collect above
-        return spark.createDataFrame(
-            rows, ST.StructType([
+        return local_frame(
+            spark, rows, ST.StructType([
                 ST.StructField("doc_id", schema["a"].dataType, False),
                 ST.StructField("comp", schema["a"].dataType, False)]))
 

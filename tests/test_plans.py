@@ -6,6 +6,8 @@ refactors can't silently regress them."""
 import hashlib
 import os
 import re
+import sys
+import zipimport
 
 import pytest
 from pyspark.sql import functions as F
@@ -52,9 +54,33 @@ def executed_plans(spark, action):
                  if e.executionId() not in seen]
 
 
-def final_tree(plan: str) -> str:
-    tree = plan.split("\n\n")[0]
-    return tree.split("== Final Plan ==")[-1].split("== Initial Plan ==")[0]
+def final_count(plans, node: str) -> int:
+    """Tree lines naming ``node`` in the final (post-AQE) plans of
+    ``plans``. A cached relation's plan is printed inside every execution
+    that reads the cache but runs once: each is counted once, keyed by
+    its output attributes."""
+    seen, n = set(), 0
+    for plan in plans:
+        tree, _, details = plan.partition("\n\n")
+        cached = dict(re.findall(
+            r"\((\d+)\) InMemoryRelation\nArguments: (.*)", details))
+        skip = None
+        for line in tree.splitlines():
+            # a node's depth is the column of its "+-"/":-" marker: the
+            # lines after a skipped node that sit deeper are its subtree
+            col = len(line) - len(line.lstrip(" :"))
+            if skip is not None and col > skip:
+                continue
+            skip = None
+            rel = re.search(r"InMemoryRelation \((\d+)\)", line)
+            if "== Initial Plan ==" in line or (
+                    rel and cached[rel[1]] in seen):
+                skip = col
+                continue
+            if rel:
+                seen.add(cached[rel[1]])
+            n += node in line
+    return n
 
 
 def scan_block(df, table: str) -> str:
@@ -208,7 +234,7 @@ class TestKgEntryPlans:
     def matcher_runs(plans):
         for attr in ("matched_term#", "annotations#"):
             assert not any(attr in p for p in plans), attr
-        return sum(final_tree(p).count("MapInPandas") for p in plans)
+        return final_count(plans, "MapInPandas")
 
     @pytest.mark.parametrize("name", sorted(HASHES))
     def test_rows_unchanged(self, run, name):
@@ -236,6 +262,84 @@ class TestKgEntryPlans:
         _, plans = executed_plans(
             spark, lambda: concept_cooccurrence_pmi(dc).collect())
         assert self.matcher_runs(plans) == 1
+
+
+class TestPythonTaskFixedCost:
+    """A Python task's fixed cost: driver-local frames on benchmarked
+    passes plan a ``LocalTableScan``, never a pickled-RDD job in a second
+    worker pool (``Scan ExistingRDD``), and a worker that imported the
+    library keeps its zip directories across task starts."""
+
+    @staticmethod
+    def rdd_scans(spark, action):
+        _, plans = executed_plans(spark, action)
+        return [p for p in plans if "Scan ExistingRDD" in p]
+
+    def test_isa_triples_local_scan_keeps_schema(self, spark):
+        from nobletools_spark.pipeline.stages import (TRIPLES_SCHEMA,
+                                                      isa_triples)
+        from nobletools_spark.terminology.fixture import fixture_dictionary
+        isa = isa_triples(spark, fixture_dictionary())
+        assert "LocalTableScan" in plan_of(isa)
+        # the JVM-side schema, non-null fields included
+        assert isa.selectExpr("*").schema == TRIPLES_SCHEMA
+        assert isa.count() == len(fixture_dictionary().isa_edges)
+
+    def test_triples_scan_no_driver_rdd(self, spark):
+        triples = TestKgPipelinePlans.pipeline(spark, False)["triples"]
+        assert not self.rdd_scans(spark, triples.collect)
+
+    def test_checkpointed_clinical_pass_scans_no_driver_rdd(self, spark,
+                                                            tmp_path):
+        from nobletools_spark.context.lexicon import modifier_dictionary
+        from nobletools_spark.pipeline.checkpoint import (
+            run_checkpointed_pipeline)
+        from nobletools_spark.pipeline.documents import (
+            interleave_flat_documents)
+        from nobletools_spark.terminology.fixture import fixture_dictionary
+        docs = interleave_flat_documents(
+            spark.read.parquet(f"{SF}/documents.parquet"))
+        assert not self.rdd_scans(spark, lambda: run_checkpointed_pipeline(
+            spark, docs, fixture_dictionary(), str(tmp_path / "ckpt"),
+            "best-match", context_dico=modifier_dictionary(),
+            salt_buckets=4, table_root=str(tmp_path / "table")))
+
+    def test_minhash_pairs_scan_no_driver_rdd(self, spark):
+        from nobletools_spark.textdata.dedup import (cache_scope,
+                                                     minhash_dup_pairs)
+        d = spark.read.parquet(f"{SF}/documents.parquet")
+        with cache_scope():
+            assert not self.rdd_scans(
+                spark, lambda: minhash_dup_pairs(d).collect())
+
+    @pytest.mark.skipif(hasattr(zipimport.zipimporter, "_get_files"),
+                        reason="zip directories are read lazily here")
+    def test_library_workers_patch_zip_importers(self, spark):
+        def probe(batches):
+            import sys
+            import zipimport
+
+            import pandas as pd
+
+            from nobletools_spark.worker_imports import StatZipImporter
+            for _ in batches:
+                pass
+            zips = [f for f in sys.path_importer_cache.values()
+                    if isinstance(f, zipimport.zipimporter)]
+            yield pd.DataFrame({
+                "worker": ["pyspark.worker" in sys.modules],
+                "zips": [len(zips)],
+                "patched": [StatZipImporter in sys.path_hooks and
+                            all(type(f) is StatZipImporter for f in zips)]})
+
+        TestKgPipelinePlans.pipeline(spark, False)["triples"].collect()
+        got = (spark.range(8, numPartitions=4)
+               .mapInPandas(probe, "worker boolean, zips long, patched boolean")
+               .collect())
+        assert got and all(r.worker and r.zips and r.patched for r in got)
+        # the driver's import machinery is never touched
+        assert zipimport.zipimporter in sys.path_hooks
+        assert "pyspark.worker" not in sys.modules
 
 
 class TestScalePathPlans:
